@@ -141,7 +141,13 @@ object Bench {
       .find(_.startsWith("some")).get.split("total=")(1).trim.toLong
     catch { case _: Throwable => -1L }
 
-  private def cpuSnap(): LoadSnap = {
+  /** The fixed host-speed probe job. The decimal accumulator matters:
+    * summing raw 64-bit hashes overflows ANSI long addition at once. */
+  private[graft] def canaryJob(spark: SparkSession): Unit =
+    spark.range(50000000L)
+      .selectExpr("sum(cast(xxhash64(id) as decimal(38,0)))").collect()
+
+  private[graft] def cpuSnap(): LoadSnap = {
     val (busy, iow) =
       try {
         val parts = scala.io.Source.fromFile("/proc/stat").getLines().next()
@@ -554,10 +560,7 @@ object Bench {
     withWatchdog("bench-canary", sliceSec = 60.0) {
       canarySec = (0 until 3).map { _ =>
         val t0 = System.nanoTime()
-        // decimal accumulator: summing raw 64-bit hashes overflows ANSI
-        // long addition almost immediately (same fix as the probes)
-        spark.range(50000000L)
-          .selectExpr("sum(cast(xxhash64(id) as decimal(38,0)))").collect()
+        canaryJob(spark)
         (System.nanoTime() - t0) / 1e9
       }.min
     }
@@ -572,8 +575,8 @@ object Bench {
     // cardinality — 25 of 107 queries (including the newest chunked-
     // prefix family, q101–q103/q106/q107) were timed at the parquet
     // scan floor, so a regression in exactly that machinery was
-    // invisible to the headline number (ProbeAudit said so honestly;
-    // the bench didn't). Executing `queryExecution.toRdd` iterates the
+    // invisible to the headline number (a plan audit of count() showed
+    // it; the bench didn't). Executing `queryExecution.toRdd` iterates the
     // planned physical tree at the InternalRow level with NO logical
     // rewrite at all: projections, global sorts, map-only transforms
     // and UnsafeRow field writes all run, and nothing is collected to
@@ -600,10 +603,7 @@ object Bench {
     def canaryPoint(force: Boolean): Unit =
       if ((force || canaryTick.incrementAndGet() % 10 == 0) && elapsed < budgetSec) {
         val t0 = System.nanoTime()
-        val (_, ok) = withWatchdog("bench-canaryseg", sliceSec = 45.0) {
-          spark.range(50000000L)
-            .selectExpr("sum(cast(xxhash64(id) as decimal(38,0)))").collect()
-        }
+        val (_, ok) = withWatchdog("bench-canaryseg", sliceSec = 45.0)(canaryJob(spark))
         if (ok) canarySeries.synchronized {
           canarySeries += ((elapsed, (System.nanoTime() - t0) / 1e9))
           // a storm-cancelled startup canary (canary_sec -1) repairs
@@ -709,11 +709,14 @@ object Bench {
     // startup canary and 16 storm-stretched JIT-warm slices, so pass 1
     // began with a quarter of the budget left. Sleep out a detected
     // storm BEFORE the optional warm pass (bounded to the first 30% of
-    // budget) instead of burning slices into it.
+    // budget) instead of burning slices into it. The wait is noted once,
+    // with the seconds slept.
+    var stormWaits = 0
     while (slownessFreshOrMax() >= DirtyCanaryRatio && elapsed < budgetSec * 0.3) {
-      notePass(f"startup-storm-wait")
+      stormWaits += 1
       Thread.sleep(10000)
     }
+    if (stormWaits > 0) notePass(s"startup-storm-wait=${stormWaits * 10}s")
     // Pin the heavy tail's JIT: the LSH/ANN kernels are compiled JVM
     // loops whose FIRST execution carries interpreter + C2 compilation
     // cost — observed as pure run-to-run variance on identical binaries

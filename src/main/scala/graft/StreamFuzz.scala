@@ -9,9 +9,9 @@ import graft.streaming.Streams
 
 /** Differential fuzz for the stateful streaming twins (r15 verdict item
   * 3) — the FuzzDiff treatment for the streaming surface: RANDOM inputs,
-  * split into time-ordered micro-batch files (the StreamProbe chunking:
-  * one file per trigger, ascending mtimes so FileStreamSource replays
-  * arrival order), driven with Trigger.AvailableNow into a memory sink,
+  * split into time-ordered micro-batch files (the `stream` probe leg's
+  * chunking: one file per trigger, ascending mtimes so FileStreamSource
+  * replays arrival order), driven with Trigger.AvailableNow into a memory sink,
   * and compared row-for-row against the corresponding BATCH operator
   * over the same data.
   *
@@ -58,10 +58,10 @@ object StreamFuzz {
   /** Write `df` as `files` event-time-ordered micro-batch files under
     * `dir` with ascending names and mtimes (FileStreamSource orders by
     * mtime; a bulk write's near-identical mtimes scramble arrival order
-    * — the StreamProbe lesson). `arrivalCol` decides the file a row
-    * lands in (bounded jitter of the event time simulates disorder). */
-  private def chunkByArrival(df: DataFrame, arrivalCol: String, dir: String,
-                             files: Int): Unit = {
+    * — the `stream` probe leg's lesson). `arrivalCol` decides the file a
+    * row lands in (bounded jitter of the event time simulates disorder). */
+  private[graft] def chunkByArrival(df: DataFrame, arrivalCol: String, dir: String,
+                                    files: Int): Unit = {
     new java.io.File(dir).mkdirs()
     val withB = df.withColumn("__b", F.ntile(files).over(
       org.apache.spark.sql.expressions.Window.orderBy(arrivalCol))).cache()
@@ -606,10 +606,10 @@ object StreamFuzz {
         Streams.newDocsStream(src, keyIndex, sketch, "content_key")
           .select("doc_id", "content_key"),
         s"sfuzz_bn_${tag}_$seed").collect().map(key).toSeq.sorted
-      val want = D.bloomNewDocs(batchDocs, keyIndex, sketch, "content_key",
-          persistTagged = false)
+      val want = D.bloomNewDocs(batchDocs, keyIndex, sketch, "content_key")
         .select("doc_id", "content_key")
         .collect().map(key).toSeq.sorted
+      graft.core.CacheRegistry.releaseAll()
       report("new_docs_stream", got, want)
       spark.sql(s"DROP TABLE IF EXISTS sfuzz_bn_${tag}_$seed")
     }

@@ -164,8 +164,8 @@ object Analytics {
   }
 
   /** PROBE SEAM: per-chunk row counts of `c`'s value axis — the balance
-    * evidence for the equi-depth boundaries (OrdProbe's skewed legs
-    * print the max-chunk share; a pathological share here is exactly
+    * evidence for the equi-depth boundaries (the `ord` probe leg's xo10
+    * prints the max-chunk share; a pathological share here is exactly
     * the silent parallelism loss the quantile boundaries remove).
     * Never used by an operator. */
   private[graft] def valueChunkCounts(f: TadaFrame, c: String):

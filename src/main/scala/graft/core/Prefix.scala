@@ -518,8 +518,8 @@ object Prefix {
       }
     }
 
-  /** LOW-CARDINALITY first-sort-key chunking (r16, found by the ×1000
-    * OrdProbe): width-bucketing keeps equal keys in one chunk, so a
+  /** LOW-CARDINALITY first-sort-key chunking (r16, found by the ×1000 `ord`
+    * probe leg): width-bucketing keeps equal keys in one chunk, so a
     * first key with d distinct values caps chunk parallelism at d
     * REGARDLESS of the configured chunk count — a 50-value key (status,
     * category, quantity) on a 4000-core cluster runs a 50-way sort.

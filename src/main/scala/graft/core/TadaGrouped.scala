@@ -662,36 +662,15 @@ object Rolling {
           // prev copies serve the windows that START one bucket back;
           // bucket-0 rows have no predecessor and the null tag (nb+1)
           // must not leak into a numeric bucket's window.
-          // SINGLE-SCAN tag fan-out knob (r22, r21 verdict item 6): the
-          // union shape reads the input TWICE (two FileScans — §6 read
-          // amplification); exploding each row's 1–2 tags map-side
-          // emits the identical (row, TAG) multiset from ONE scan with
-          // unchanged exchange bytes. MEASURED A/B at sf0.1 (OptProbe
-          // rdSingleScan + JobProbe, quiet window): explode is ~0.5 s
-          // SLOWER here, because the local input is ONE parquet split —
-          // the union's two branches scan in parallel (2 map tasks)
-          // while explode serializes all tag generation on one task.
-          // That inverts on real inputs (many splits: both forms
-          // parallelize, and one scan halves the read I/O), so the
-          // production setting is `graft.rollingDuration.singleScan=
-          // true`; the local default keeps the union form — the
-          // bench-comparable shape on single-split inputs.
-          val singleScan =
-            try f.df.sparkSession.conf
-              .get("graft.rollingDuration.singleScan", "false").toBoolean
-            catch { case _: Throwable => false }
-          val both =
-            if (singleScan)
-              tagged.withColumn(TAG, F.explode(
-                F.when(F.col(OWN) >= 1L && F.col(OWN) <= nb.toLong,
-                  F.array(F.col(OWN), F.col(OWN) - 1L))
-                 .otherwise(F.array(F.col(OWN)))))
-            else {
-              val own = tagged.withColumn(TAG, F.col(OWN))
-              val prev = tagged.withColumn(TAG, F.col(OWN) - 1L)
-                .filter(F.col(OWN) >= 1L && F.col(OWN) <= nb.toLong)
-              own.unionByName(prev)
-            }
+          // The union reads the input twice (two FileScans). An explode
+          // of each row's 1–2 tags emits the same (row, TAG) multiset
+          // from one scan, but measured ~0.5 s slower at sf0.1: a single
+          // parquet split lets the union's two branches scan in parallel
+          // while explode serializes tag generation on one task.
+          val own = tagged.withColumn(TAG, F.col(OWN))
+          val prev = tagged.withColumn(TAG, F.col(OWN) - 1L)
+            .filter(F.col(OWN) >= 1L && F.col(OWN) <= nb.toLong)
+          val both = own.unionByName(prev)
           val w = Window
             .partitionBy(partCols.map(F.col) :+ F.col(TAG): _*)
             .orderBy(Prefix.tsMicros(F.col(tsCol), f.df.schema(tsCol).dataType))

@@ -383,21 +383,15 @@ object Dedup {
     * increment costs O(batch), never O(corpus). */
   def sourceChunkOverlapIncremental(index: DataFrame, oldMatrix: DataFrame,
                                     batch: DataFrame, textCol: String,
-                                    sourceCol: String, size: Int = 3,
-                                    persistFresh: Boolean = true): DataFrame = {
+                                    sourceCol: String, size: Int = 3): DataFrame = {
     // `fresh` feeds TWO consumers below (the membership union and the
     // delta join's probe side), so without a cache the batch is
     // scanned, chunk-hashed, distinct-shuffled and anti-joined TWICE
-    // per run (r22, r21 verdict item 4 — §6 read amplification). The
-    // frame is batch-sized (chunk_hash, source) scalars; tracked so the
-    // consumer releases it after the action. Knob kept for the
-    // recompute A/B (OptProbe `q88Fresh`).
-    val fresh0 = chunkHashIndex(batch, textCol, sourceCol, size)
-      .join(index, Seq("chunk_hash", "source"), "left_anti")
-    val fresh =
-      if (persistFresh)
-        graft.core.CacheRegistry.track("sourceChunkOverlapIncremental.fresh", fresh0)
-      else fresh0
+    // per run. The frame is batch-sized (chunk_hash, source) scalars;
+    // tracked so the consumer releases it after the action.
+    val fresh = graft.core.CacheRegistry.track("sourceChunkOverlapIncremental.fresh",
+      chunkHashIndex(batch, textCol, sourceCol, size)
+        .join(index, Seq("chunk_hash", "source"), "left_anti"))
     val others = index.unionByName(fresh)
       .select(F.col("chunk_hash"), F.col("source").as("other"))
     val delta = fresh.join(others, "chunk_hash")
@@ -465,18 +459,14 @@ object Dedup {
     * Scan discipline (ADVICE r7): the verdict splits the batch into a
     * join branch and a pass-through branch — Spark has no cross-branch
     * subplan reuse, so naively both branches re-scan the source and
-    * re-compute the key + bloom probe per row. `persistTagged` (default
-    * true) caches the batch WITH its bloom verdict after ONE scan; both
-    * branches read the cache. The cache is exactly one increment's rows
-    * (MEMORY_AND_DISK — safe at any batch size) and lives until the
-    * session's next `clearCache()`; callers that would rather re-scan
-    * than cache (e.g. per-micro-batch invocations where the cache would
-    * accumulate) pass false and get the previous two-scan plan. Either
-    * way the SHUFFLE prune — the point of the sketch — is identical:
-    * only bloom-positive rows enter the anti-join exchange. */
+    * re-compute the key + bloom probe per row. The batch is cached WITH
+    * its bloom verdict after ONE scan; both branches read the cache.
+    * The cache is exactly one increment's rows (MEMORY_AND_DISK — safe
+    * at any batch size), tracked in `CacheRegistry`, so the caller
+    * releases it with `CacheRegistry.releaseAll()` after its action.
+    * Only bloom-positive rows enter the anti-join exchange. */
   def bloomNewDocs(batch: DataFrame, index: DataFrame,
-                   sketch: Array[Byte],
-                   keyCol: String, persistTagged: Boolean = true): DataFrame = {
+                   sketch: Array[Byte], keyCol: String): DataFrame = {
     // string keys only — the content-key contract (and the oracle's)
     require(batch.schema(keyCol).dataType ==
         org.apache.spark.sql.types.StringType,
@@ -490,9 +480,8 @@ object Dedup {
     // "nulls pass as new" contract as before, now without a UDF.
     val might = F.call_function("bloom_might_contain",
       F.lit(sketch), F.xxhash64(F.col(keyCol)))
-    val tagged0 = batch.withColumn("__might", might)
-    val tagged = if (persistTagged)
-      graft.core.CacheRegistry.track("bloomNewDocs.tagged", tagged0) else tagged0
+    val tagged = graft.core.CacheRegistry.track("bloomNewDocs.tagged",
+      batch.withColumn("__might", might))
     val positives = tagged.filter(F.col("__might"))
       .join(index.select(F.col(keyCol)).distinct(), Seq(keyCol), "left_anti")
     tagged.filter(!F.col("__might")).unionByName(positives).drop("__might")
@@ -939,22 +928,18 @@ object Dedup {
     * the whole profile is two co-partitioned exchanges plus the final
     * per-doc rollup. */
   def chunkDedupProfile(docs: DataFrame, idCol: String, textCol: String,
-                        size: Int = 3, persistChunks: Boolean = false): DataFrame = {
-    val chunks0 = docs
+                        size: Int = 3): DataFrame = {
+    val chunks = docs
       .select(F.col(idCol), TextOps.tokens(F.col(textCol)).as("__w"))
       .select(F.col(idCol),
         // kernel form: one compiled call per row — the HOF expression
         // form is CodegenFallback and pays interpreted eval per chunk
         F.explode(TextOps.chunkHashesKernel(F.col("__w"), size)).as("chunk_hash"))
     // The profile side and the instance side both derive from `chunks`,
-    // so the corpus is scanned twice by default. Measured at sf0.1
-    // (ChunkProbe): persist 1.9 s vs warm recompute 2.1 s — a wash
-    // locally. The knob matters at 100 TB: persist caches the full
-    // chunk explosion (O(tokens/size) 16-byte hashes) to trade memory
-    // for the second corpus scan; leave false when the scan is cheaper
-    // than the cache footprint (the usual case on columnar storage).
-    val chunks = if (persistChunks)
-      graft.core.CacheRegistry.track("chunkDedupProfile.chunks", chunks0) else chunks0
+    // so the corpus is scanned twice. Measured at sf0.1: persisting the
+    // chunk explosion 1.9 s vs warm recompute 2.1 s — a wash, and the
+    // cache (O(tokens/size) 16-byte hashes) costs memory the columnar
+    // re-scan does not.
     val profile = chunks.groupBy("chunk_hash")
       .agg(F.min(idCol).as("__mn"), F.max(idCol).as("__mx"))
       .select(F.col("chunk_hash"), (F.col("__mn") =!= F.col("__mx")).as("__dup"))
@@ -1113,7 +1098,7 @@ object Dedup {
 
   /** How much evidence a stop-gram cap excludes (r16 verdict item 3):
     * grams with df > maxDf carry no containment evidence BY DESIGN, but
-    * before r17 the excluded mass was visible only in DocProbe's `qcap`
+    * before r17 the excluded mass was visible only in the `docs` probe's `qcap`
     * print — so an empty pair set at corpus scale was indistinguishable
     * from a genuinely duplication-free corpus without re-running the
     * probe. `excludedRowFraction` near 1.0 means "the corpus's gram
@@ -1203,7 +1188,7 @@ object Dedup {
     * exactly in waves, and the incremental nightly (q92's shape) keeps
     * the fixed semantic cap because its fold's fan-out is
     * BATCH-bounded, never corpus-mass-bounded. Retained as the capacity
-    * DIAGNOSTIC it always computed (DocProbe's `qcap` prints it per
+    * DIAGNOSTIC it always computed (the `docs` probe's `qcap` prints it per
     * decade; a pipeline can price "what cap WOULD a given rebuild
     * budget force" before provisioning): evidence narrows to the
     * lowest-df, i.e. most-discriminative, grams; `cap = 1` means "no
@@ -1293,12 +1278,11 @@ object Dedup {
     * that can enter waves ([[winnowOverlapPairs]], the incremental
     * folds). */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int = 3, tau: Double = 0.8, maxDf: Int = 1000,
-                       persistGrams: Boolean = false): DataFrame = {
+                       k: Int = 3, tau: Double = 0.8, maxDf: Int = 1000): DataFrame = {
     val grams0 = docs
       .select(F.col(idCol).as("id"), TextOps.tokens(F.col(textCol)).as("__w"))
       .select(F.col("id"), F.explode(TextOps.distinctKgramHashes(F.col("__w"), k)).as("g"))
-    containmentPairsFromFeatures(grams0, "containmentPairs", tau, maxDf, persistGrams)
+    containmentPairsFromFeatures(grams0, "containmentPairs", tau, maxDf)
   }
 
   /** Winnow-fingerprint overlap pairs — the plagiarism-detection /
@@ -1317,13 +1301,11 @@ object Dedup {
     * regime (see [[containmentPairs]]). */
   def winnowOverlapPairs(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 3, w: Int = 4, tau: Double = 0.6,
-                         maxDf: Int = 1000,
-                         persistFps: Boolean = false): DataFrame = {
+                         maxDf: Int = 1000): DataFrame = {
     val fps = docs
       .select(F.col(idCol).as("id"), TextOps.tokens(F.col(textCol)).as("__w"))
       .select(F.col("id"), F.explode(TextOps.winnowFromTokens(F.col("__w"), k, w)).as("g"))
-    containmentPairsFromFeatures(fps, "winnowOverlapPairs", tau, maxDf,
-      persistFeatures = persistFps)
+    containmentPairsFromFeatures(fps, "winnowOverlapPairs", tau, maxDf)
   }
 
   /** The feature-generic core of the containment family: asymmetric
@@ -1334,8 +1316,7 @@ object Dedup {
     * broadcasts. `features` must be DISTINCT per (id, g) — both
     * producers are distinct by construction. */
   private[graft] def containmentPairsFromFeatures(
-      grams0: DataFrame, tag: String, tau: Double, maxDf: Int,
-      persistFeatures: Boolean): DataFrame = {
+      grams0: DataFrame, tag: String, tau: Double, maxDf: Int): DataFrame = {
     val spark = grams0.sparkSession
     val machine = math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions)
@@ -1412,12 +1393,10 @@ object Dedup {
     val w = Explosion.width(estForWidth, machine)
     if (w != machine) Explosion.logWidth(tag, estForWidth, w)
     // the filtered gram frame feeds three consumers (sizes + both join
-    // sides) = three corpus scans by default — and one more PER WAVE.
-    // Same knob/tradeoff as `chunkDedupProfile.persistChunks`: persist
-    // caches the (id, g) scalar explosion — O(tokens) 16-byte rows — to
-    // trade memory for the repeated scan; leave false when columnar
-    // re-scan is cheaper than the cache footprint (the usual case).
-    // Waves force it: the re-scan is per wave there, and the cache is
+    // sides) = three corpus scans — and one more PER WAVE. A single pass
+    // re-scans: the (id, g) cache — O(tokens) 16-byte rows — costs more
+    // than the columnar re-scan (the `chunkDedupProfile` tradeoff).
+    // Waves cache it: the re-scan is per wave there, and the cache is
     // O(corpus) while the mass that triggered waves is ≫ O(corpus).
     // vocabulary side broadcast when small (memoized count; the
     // pair-mass estimate above already materialized gdf's cache, so
@@ -1426,7 +1405,7 @@ object Dedup {
     // dominant cost
     val grams1 = grams0.join(maybeBroadcastVocab(gdf, gdf), "g")
       .filter(F.col("__df") <= maxDf).select("id", "g")
-    val grams = if (persistFeatures || waves > 1)
+    val grams = if (waves > 1)
       graft.core.CacheRegistry.track(s"$tag.features", grams1) else grams1
     // broadcast decision from the distinct feature-carrier count — the
     // one-row-per-id frame the sizes aggregation produces (memoized;

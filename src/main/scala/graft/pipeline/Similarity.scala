@@ -290,9 +290,9 @@ object Similarity {
     * probe). The pass-through produces the identical frame with ZERO
     * exchange; for n > 1 the vector is duplicated n× map-side, still
     * exchange-free and cheaper than re-keying the corpus. */
-  private def nearestCellsCarry(df: DataFrame, centroids: DataFrame,
-                                id: String, vec: String, n: Int,
-                                cos: (Column, Column) => Column): DataFrame = {
+  private[graft] def nearestCellsCarry(df: DataFrame, centroids: DataFrame,
+                                       id: String, vec: String, n: Int,
+                                       cos: (Column, Column) => Column): DataFrame = {
     val sims = simStructs(F.col(vec), cos)
     val top = if (n == 1) F.array(F.array_min(sims)) else F.slice(F.array_sort(sims), 1, n)
     df.select(F.col(id), F.col(vec))
@@ -341,8 +341,9 @@ object Similarity {
       // and BIT-IDENTICAL to the two-step form (the sorted-sum
       // re-average contract): per (cell, dim) the same multiset of
       // doubles is array_sorted and left-folded, so collect order can
-      // never move the float result. PipelineSpec pins fused ≡ two-step
-      // on the real corpus; the q55/q56/q58 oracles hash-pin the rest.
+      // never move the float result. PipelineSpec pins fused ≡ the
+      // two-step reference (PipelineSpec.trainCentroidsTwoStep) on the
+      // real corpus; the q55/q56/q58 oracles hash-pin the rest.
       // Precondition (the corpus contract): fixed-width vectors with no
       // null elements — the same shape every cosine below assumes.
       centroids = nearestCellsCarry(c, centroids, "cid0", "cv", 1, cos)
@@ -356,30 +357,6 @@ object Similarity {
                       v => F.element_at(v, d + 1).cast("double"))),
                     F.lit(0.0), (acc, y) => acc + y)
                   / F.size(F.col("__vs"))).cast("float")).as("centroid"))
-        .persist()
-    }
-    centroids
-  }
-
-  /** The r13–r21 two-shuffle re-average (posexplode → groupBy(cell,
-    * dim) → groupBy(cell)) — retained ONLY as the bit-exactness anchor
-    * for the fused round above (PipelineSpec parity + the OptProbe
-    * `ivfFuse` leg). Not on any query path. */
-  private[graft] def trainCentroidsTwoStep(c: DataFrame, nlist: Int, iters: Int,
-                                           cos: (Column, Column) => Column): DataFrame = {
-    var centroids = c.orderBy("cid0").limit(nlist)
-      .select(F.row_number().over(Window.orderBy("cid0")).as("cell"), F.col("cv").as("centroid"))
-    for (_ <- 0 until iters) {
-      centroids = nearestCellsCarry(c, centroids, "cid0", "cv", 1, cos)
-        .select(F.col("cell"), F.posexplode(F.col("cv")).as(Seq("dim", "x")))
-        .groupBy("cell", "dim")
-        .agg(F.aggregate(F.array_sort(F.collect_list(F.col("x").cast("double"))),
-               F.lit(0.0), (acc, y) => acc + y).as("__s"),
-             F.count(F.lit(1)).as("__n"))
-        .select(F.col("cell"), F.col("dim"), (F.col("__s") / F.col("__n")).as("m"))
-        .groupBy("cell").agg(
-          F.transform(F.array_sort(F.collect_list(F.struct(F.col("dim"), F.col("m")))),
-            s => s.getField("m").cast("float")).as("centroid"))
         .persist()
     }
     centroids
@@ -402,21 +379,10 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 4, iters: Int = 2,
               idCol: String = "vec_id", vecCol: String = "embedding",
-              queryCount: Long = -1L): DataFrame =
-    ivfTopKWithTrainer(corpus, queries, k, nlist, nprobe, iters,
-      idCol, vecCol, queryCount, trainCentroids)
-
-  /** [[ivfTopK]] with a pluggable trainer — the seam the OptProbe
-    * `ivfFuse` A/B and the PipelineSpec parity case drive the retained
-    * two-step re-average through. Not a public contract. */
-  private[graft] def ivfTopKWithTrainer(corpus: DataFrame, queries: DataFrame, k: Int,
-              nlist: Int = 16, nprobe: Int = 4, iters: Int = 2,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              queryCount: Long = -1L,
-              trainer: (DataFrame, Int, Int, (Column, Column) => Column) => DataFrame): DataFrame = {
+              queryCount: Long = -1L): DataFrame = {
     val cos = cosineNative(corpus.sparkSession) _
     val c = corpus.select(F.col(idCol).as("cid0"), F.col(vecCol).as("cv"))
-    val centroids = trainer(c, nlist, iters, cos)
+    val centroids = trainCentroids(c, nlist, iters, cos)
     val indexed = nearestCellsCarry(c, centroids, "cid0", "cv", 1, cos)
       .select(F.col("cid0").as("neighbor_id"), F.col("cv"), F.col("cell"))
     val q0 = queries.select(F.col(idCol).as("query_id"), F.col(vecCol).as("qv"))

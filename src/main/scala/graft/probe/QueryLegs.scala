@@ -1,0 +1,112 @@
+package graft.probe
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{functions => F}
+
+import graft.Probe._
+
+/** Probe legs over the registered queries (`time`, `jobs`, `explain`)
+  * and the connected-components stress graph (`cc`). */
+object QueryLegs {
+
+  /** One untimed warm pass (JIT + codegen, as Bench warms), then the
+    * timed reps. Two checkouts alternated within one window compare
+    * canary-normalised; a conf A/B is two runs with different `conf:`. */
+  def time(spark: SparkSession, a: Args): Unit = {
+    val qs = queries(a.names)
+    qs.foreach { case (_, fn) =>
+      try checksum(fn(spark, a.sf)) catch { case _: Throwable => () }
+      release(spark)
+    }
+    timeReps(spark, a.sf, qs, a.reps.getOrElse(3), () => {
+      val t0 = System.nanoTime(); graft.Bench.canaryJob(spark); secs(t0)
+    })
+  }
+
+  /** Rep-major timing rows, each after a fresh canary reading. A query
+    * that throws prints its FAILED row and the rest still run. */
+  private[graft] def timeReps(spark: SparkSession, sfDir: String,
+                              qs: Seq[(String, (SparkSession, String) => DataFrame)],
+                              reps: Int, canary: () => Double): Unit =
+    for (rep <- 1 to reps; (name, fn) <- qs) {
+      val c = canary()
+      timed(spark, s"$name rep$rep", f"canary=$c%.3f")(fn(spark, sfDir))
+    }
+
+  /** Splits each rep into construction (driver work plus any jobs run
+    * while building the DataFrame: bounds estimates, memoized counts,
+    * eager CC rounds) and force, listing the slowest jobs of each with
+    * their call sites: many short jobs are per-job overhead to cut, one
+    * long shuffle is bytes to cut. Rep 1 carries cold memoized-bounds
+    * jobs and codegen. */
+  def jobs(spark: SparkSession, a: Args): Unit = {
+    val started = TrieMap.empty[Int, (Long, String)]
+    val done = new ConcurrentLinkedQueue[(Int, Double, String)]
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started(e.jobId) = (System.nanoTime(), Option(e.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?"))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        started.remove(e.jobId).foreach { case (t0, site) => done.add((e.jobId, secs(t0), site)) }
+    })
+    def drained(): Vector[(Int, Double, String)] = {
+      Thread.sleep(300) // listener bus drain (its flush is private API)
+      done.asScala.toVector
+    }
+    def fmt(js: Vector[(Int, Double, String)]): String =
+      js.sortBy(-_._2).take(8).map { case (id, s, site) => f"j$id=$s%.2fs[$site]" }.mkString(" ")
+    for ((name, fn) <- queries(a.names); rep <- 1 to a.reps.getOrElse(2)) {
+      done.clear()
+      val t0 = System.nanoTime()
+      val df = fn(spark, a.sf)
+      val build = secs(t0)
+      val buildJobs = drained()
+      val t1 = System.nanoTime()
+      val (rows, sum) = checksum(df)
+      val force = secs(t1)
+      val forceJobs = drained().drop(buildJobs.size)
+      println(f"$name rep$rep build=$build%.2fs (${buildJobs.size} jobs) " +
+        f"force=$force%.2fs (${forceJobs.size} jobs) total=${build + force}%.2fs rows=$rows sum=$sum")
+      println(s"  build: ${fmt(buildJobs)}")
+      println(s"  force: ${fmt(forceJobs)}")
+      release(spark)
+    }
+  }
+
+  def explain(spark: SparkSession, a: Args): Unit =
+    queries(a.names).foreach { case (name, fn) =>
+      println(s"\n===== $name =====")
+      try fn(spark, a.sf).explain("formatted")
+      catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+    }
+
+  /** Connected components forced down the iterative scale path on
+    * 100k chains of 5 plus 50k random cross edges (components of widely
+    * varying size and diameter), then compared with the local solve. */
+  def cc(spark: SparkSession, a: Args): Unit = {
+    val chains = spark.range(500000L)
+      .select(F.col("id").as("id_a"), (F.col("id") + 1).as("id_b"))
+      .filter(F.col("id_a") % 5 =!= 4)
+    val rnd = spark.range(50000L).select(
+      F.abs(F.xxhash64(F.col("id")) % 500000L).as("id_a"),
+      F.abs(F.xxhash64(F.col("id") + 7L) % 500000L).as("id_b"))
+    val pairs = chains.union(rnd)
+    val t0 = System.nanoTime()
+    var rounds = -1
+    val labels = graft.pipeline.Dedup.connectedComponents(pairs, localSolveMaxEdges = 0,
+      maxIter = 60, onStarRounds = r => rounds = r)
+    val (rows, sum) = checksum(labels)
+    val clusters = labels.select(F.countDistinct("cluster")).head().getLong(0)
+    println(f"cc rows=$rows sum=$sum clusters=$clusters rounds=$rounds ${secs(t0)}%.1f s")
+    val local = graft.pipeline.Dedup.connectedComponents(pairs)
+    val diff = labels.as("a").join(local.as("b"), "id")
+      .filter(F.col("a.cluster") =!= F.col("b.cluster")).count()
+    println(s"cc mismatches_vs_local=$diff")
+  }
+}

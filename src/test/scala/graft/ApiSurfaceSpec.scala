@@ -144,7 +144,7 @@ class ApiSurfaceSpec extends AnyFunSuite {
     val multi = byPack.groupBy(_._1).collect { case (n, ps) if ps.size > 1 => n }
     assert(multi.isEmpty, s"queries in more than one pack: ${multi.mkString(",")}")
     // numeric prefixes are unique too — two q41_* entries would collide
-    // in every prefix-addressed harness (Verify subset arg, ScaleProbe)
+    // in every prefix-addressed harness (Verify subset arg, graft.Probe)
     val numDup = all.map(_.name.takeWhile(_ != '_')).groupBy(identity)
       .collect { case (n, g) if g.size > 1 => n }
     assert(numDup.isEmpty, s"duplicate query numbers: ${numDup.mkString(",")}")

@@ -487,21 +487,8 @@ class PrefixSpec extends AnyFunSuite {
     val plan = got.df.queryExecution.optimizedPlan.toString
     assert(plan.contains("__rd_"), "whole-frame rollingDuration did not chunk")
     assertNoGlobalDataWindow(got.df)
-    // r22 single-scan fan-out knob: the default union form (two input
-    // branches — the bench-comparable shape on single-split local
-    // inputs) must equal the production explode form, which reads the
-    // input ONCE (no Union anywhere in its plan)
-    assert(plan.contains("Union"),
-      "default chunked plan is expected to be the union anchor form")
-    val sp = f.df.sparkSession
-    sp.conf.set("graft.rollingDuration.singleScan", "true")
-    try {
-      val oneScan = Rolling.rollingDuration(f, "ts", 5000000L, "v",
-        c => F.sum(c), "r5", finish = identity)
-      assert(!oneScan.df.queryExecution.optimizedPlan.toString.contains("Union"),
-        "single-scan form still unions two input scans")
-      assert(oneScan.records() == got.records())
-    } finally sp.conf.unset("graft.rollingDuration.singleScan")
+    // the tag fan-out is the union of own and previous-bucket copies
+    assert(plan.contains("Union"), "chunked plan is expected to be the union form")
     // a window longer than span/ (2*2) falls back to the window form
     val wide = Rolling.rollingDuration(f, "ts", 60000000L, "v", c => F.sum(c), "rw")
     assert(!wide.df.queryExecution.optimizedPlan.toString.contains("__rd_"))
