@@ -293,4 +293,114 @@ class BenchPolicySpec extends AnyFunSuite {
     // idempotent: a second release with nothing registered is a no-op
     CacheRegistry.releaseAll()
   }
+
+  // --- the adjudicator: a pure verdict over synthetic rep logs --------
+
+  private def rep(q: String, t: Double, dt: Double, ok: Boolean = true, round: Int = 0,
+                  ext: Double = 0.0, io: Double = 0.0) =
+    Bench.Rep(q, round, t, dt, ok, if (ok) "" else s"SparkException@${dt}s: cancelled", ext, io,
+      buildS = dt / 4, forceS = dt - dt / 4)
+  /** A clean canary point every 20 s over [from, to]. */
+  private def clean(from: Double, to: Double, sec: Double) =
+    (0 to ((to - from) / 20).toInt).map(i => (from + 20.0 * i, sec))
+
+  test("adjudicate: a quiet log is not loaded and each min is the least successful rep") {
+    val reps = Seq(rep("q01_a", 10, 1.2), rep("q02_b", 11, 0.3),
+      rep("q01_a", 20, 1.1, round = 1), rep("q02_b", 21, 0.25, round = 1),
+      rep("q01_a", 30, 1.15, round = 2, ext = 0.4))
+    val v = Bench.adjudicate(reps, clean(0, 40, 0.75), cpus = 8)
+    assert(!v.loaded && v.dirtyAtMin.isEmpty && v.failed.isEmpty && v.errors.isEmpty)
+    assert(v.queries == Map("q01_a" -> 1.1, "q02_b" -> 0.25))
+    assert(v.first == Map("q01_a" -> 1.2, "q02_b" -> 0.3))
+    assert(v.atMin("q01_a").t == 20)
+    // 1.15 agrees with the 1.1 before it on a quiet host: nothing left to retry
+    assert(v.settled == Set("q01_a") && v.retry.isEmpty)
+  }
+
+  test("adjudicate: a quiet-looking min beside a dirty canary point is dirty (the r22 q11 shape)") {
+    // 7.04 s at 32 cores (0.82 s at 8): ext/io read quiet, but the point
+    // two seconds away caught the throttle burst at 39 s
+    val series = clean(0, 240, 0.42) ++ Seq((250.0, 39.0), (270.0, 0.43))
+    val v = Bench.adjudicate(Seq(rep("q11_lookup", 252, 7.04)), series, cpus = 32)
+    assert(v.dirtyAtMin == Seq("q11_lookup") && v.loaded)
+    assert(v.retry == Set("q11_lookup"))
+    // a clean re-run lands the real number and clears the flag
+    val again = Bench.adjudicate(Seq(rep("q11_lookup", 252, 7.04),
+      rep("q11_lookup", 265, 0.82, round = 1)), series, cpus = 32)
+    assert(again.queries("q11_lookup") == 0.82 && !again.loaded && again.retry.isEmpty)
+    // a dirty min within 10% of a clean rep is confirmed, not dirty
+    val confirmed = Bench.adjudicate(Seq(rep("q11_lookup", 252, 7.04),
+      rep("q11_lookup", 268, 7.5, round = 1)), series, cpus = 32)
+    assert(!confirmed.loaded)
+  }
+
+  test("adjudicate: a whole-window storm is flagged through clampedBest") {
+    // every point ~28 s on 32 cores: relative to itself the series reads
+    // 1.0x, against the clamped clean ceiling it reads ~19x
+    val series = Seq((0.0, 28.0), (20.0, 28.4), (40.0, 27.9))
+    val v = Bench.adjudicate(Seq(rep("q55_cos", 30, 5.0), rep("q56_knn", 35, 60.0, ok = false)),
+      series, cpus = 32)
+    assert(v.dirtyAtMin == Seq("q55_cos") && v.loaded)
+    assert(v.failed == Seq("q56_knn") && v.failedDirty == Seq("q56_knn"))
+  }
+
+  test("adjudicate: failed_dirty holds only failures with no provably clean cancellation") {
+    val series = clean(0, 100, 0.42) ++ Seq((120.0, 10.0), (140.0, 12.0))
+    val reps = Seq(
+      rep("q41_lsh", 125, 15, ok = false), rep("q41_lsh", 145, 15, ok = false, round = 1),
+      rep("q58_dup", 60, 15, ok = false), rep("q58_dup", 130, 15, ok = false, round = 1),
+      // quiet ext/io but no canary point within CanaryFreshSec: unmeasured, so dirty
+      rep("q94_strip", 400, 15, ok = false))
+    val v = Bench.adjudicate(reps, series, cpus = 32)
+    assert(v.failed == Seq("q41_lsh", "q58_dup", "q94_strip"))
+    assert(v.failedDirty == Seq("q41_lsh", "q94_strip"))
+    assert(v.retry == v.failed.toSet)
+  }
+
+  test("adjudicate: a failed rep followed by a slower success is not failed") {
+    val reps = Seq(rep("q42_simhash", 20, 15.0, ok = false), rep("q42_simhash", 60, 20.0, round = 1))
+    val v = Bench.adjudicate(reps, clean(0, 80, 0.42), cpus = 32)
+    assert(v.failed.isEmpty && v.errors.isEmpty)
+    // the cancelled rep's elapsed-at-cancel never becomes the min
+    assert(v.queries == Map("q42_simhash" -> 20.0))
+    assert(!v.first.contains("q42_simhash"), "round 0 produced no number")
+  }
+
+  test("errors holds registry query names only: a failed canary is a missing series point") {
+    // the canary due at t=40 was cancelled, so the series skips it; the
+    // one failed query rep is the only error
+    val series = Seq((0.0, 0.42), (20.0, 0.43), (60.0, 0.42))
+    val reps = Seq(rep("q41_lsh", 45, 15.0, ok = false), rep("q01_agg", 50, 0.4))
+    val v = Bench.adjudicate(reps, series, cpus = 32)
+    assert(v.errors.keySet == Set("q41_lsh"))
+    assert(v.errors("q41_lsh").contains("cancelled"))
+  }
+
+  test("an emitted BENCH_DETAIL re-adjudicates to the same verdict") {
+    import scala.jdk.CollectionConverters._
+    val series = clean(0, 100, 0.42) ++ Seq((120.0, 10.0), (140.0, 12.0), (160.0, 0.44))
+    val reps = Seq(
+      rep("q01_agg", 5, 1.31), rep("q11_lookup", 125, 7.04),
+      rep("q41_lsh", 130, 15, ok = false), rep("q58_dup", 60, 15, ok = false),
+      rep("q01_agg", 150, 1.2, round = 1, ext = 3.1), rep("q11_lookup", 158, 0.82, round = 1, io = 0.2),
+      rep("q58_dup", 162, 3.75, round = 1)).map(r => if (r.ok) r else r.copy(err = r.err + " \"quoted\" \\ path"))
+    val v = Bench.adjudicate(reps, series, cpus = 32)
+    val json = Bench.detailJson(v, reps, series, Seq("partial" -> "false"))
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val parsed = root.get("reps").elements().asScala.map { n =>
+      Bench.Rep(n.get("q").asText, n.get("round").asInt, n.get("t").asDouble, n.get("dt").asDouble,
+        n.get("ok").asBoolean, n.get("err").asText, n.get("ext").asDouble, n.get("io").asDouble,
+        n.get("build_s").asDouble, n.get("force_s").asDouble)
+    }.toSeq
+    val pts = root.get("canary_series").elements().asScala.map(p => (p.get(0).asDouble, p.get(1).asDouble)).toSeq
+    assert(parsed == reps && pts == series)
+    assert(Bench.adjudicate(parsed, pts, cpus = 32) == v)
+    // the emitted fields agree with the verdict they came from
+    assert(root.get("queries").get("q58_dup").asDouble == 3.75)
+    assert(root.get("queries").get("q41_lsh").asDouble == -1.0)
+    assert(root.get("build_at_min").get("q58_dup").asDouble + root.get("force_at_min").get("q58_dup").asDouble == 3.75)
+    assert(root.get("loaded").asBoolean == v.loaded)
+    assert(root.get("failed").elements().asScala.map(_.asText).toSeq == v.failed)
+    assert(root.get("errors").fieldNames().asScala.toSeq == Seq("q41_lsh"))
+  }
 }
