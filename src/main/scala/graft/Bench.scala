@@ -337,7 +337,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // events.ts is TIMESTAMP(NANOS); without this it fails to load at all
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.io.Sources.nanosAsLong(spark)
 
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
     val log = ArrayBuffer.empty[Rep]

@@ -4,10 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
-  * Always go through `spark.read.parquet` so Catalyst gets a relation it
-  * can push filters/column pruning into — at 100 TB the scan is the
-  * dominant cost and `PushedFilters`/`ReadSchema` pruning is the single
-  * biggest lever.
+  * Always go through `graft.io.Sources.read`: it returns the same
+  * parquet relation `spark.read.parquet` does, so Catalyst can push
+  * filters/column pruning into it — at 100 TB the scan is the dominant
+  * cost and `PushedFilters`/`ReadSchema` pruning is the single biggest
+  * lever — and it reads each file version's footer schema once per
+  * session instead of running a footer job on every build.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +17,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.io.Sources.read(spark, "parquet", s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")
@@ -31,7 +33,7 @@ object Tables {
     * comparisons see identical values regardless of the file's physical
     * type. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.io.Sources.nanosAsLong(spark)
     normalizeEventTs(apply(spark, dir, "events"))
   }
 

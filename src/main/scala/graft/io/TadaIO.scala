@@ -13,8 +13,10 @@ import graft.semantics.TadaFormat
   * strings — plus the `(null)` record writer, ASCII rendering, mock-CSV
   * generation and diff-based equality for the test-driven workflow.
   *
-  * Scale note: `readCsvPath` is the distributed path (`spark.read.csv`
-  * keeps the scan parallel and pushdown-capable). The record/string
+  * Scale note: `readCsvPath` and `readJson` are the distributed paths
+  * (`Sources.read` returns Spark's own file scan, parallel and
+  * pushdown-capable, and infers each file version's schema once per
+  * session). The record/string
   * forms are driver-side by nature — they exist for the reference's
   * test-driven pipeline workflow (readme_test.go), not for bulk data.
   */
@@ -167,17 +169,18 @@ object TadaIO {
     out.result()
   }
 
-  /** Distributed CSV scan — the scale path. */
+  /** Distributed CSV scan — the scale path. Reads through
+    * `Sources.read`: the header job and, with `inferTypes`, the full-file
+    * inference scan run on the first read of a file version only; a
+    * repeat read of unchanged files reuses the schema (the typed-once
+    * coercion of SURVEY §6) and starts no job until the plan is forced. */
   def readCsvPath(spark: SparkSession, path: String,
-                  cfg: ReadConfig = ReadConfig()): TadaFrame = {
-    val df = spark.read
-      .option("header", cfg.headerRows > 0)
-      .option("delimiter", cfg.delimiter.toString)
-      .option("nullValue", cfg.nullStrings.headOption.getOrElse("(null)"))
-      .option("inferSchema", cfg.inferTypes)
-      .csv(path)
-    TadaFrame.ingest(df)
-  }
+                  cfg: ReadConfig = ReadConfig()): TadaFrame =
+    TadaFrame.ingest(Sources.read(spark, "csv", path, Map(
+      "header" -> (cfg.headerRows > 0).toString,
+      "delimiter" -> cfg.delimiter.toString,
+      "nullValue" -> cfg.nullStrings.headOption.getOrElse("(null)"),
+      "inferSchema" -> cfg.inferTypes.toString)))
 
   /** RecordWriter (io.go:271-299): frame → [][]string, nulls as
     * "(null)" (internal.go:2866-2890). Header row first. */
@@ -521,7 +524,7 @@ object TadaIO {
     * name, colLevelNames, null-kind distinctions) does not survive it —
     * use `marshalFrame`/`unmarshalFrame` for full-fidelity frames. */
   def readJson(spark: SparkSession, path: String): TadaFrame =
-    TadaFrame.ingest(spark.read.json(path))
+    TadaFrame.ingest(Sources.read(spark, "json", path))
   def writeJson(f: TadaFrame, path: String): Unit =
     f.df.select((f.labels ++ f.valueCols).map(F.col): _*)
       .write.mode("overwrite").json(path)

@@ -32,11 +32,14 @@ object Streams {
     d.withWatermark(c, delay)
   }
 
-  /** Streaming read of an events-shaped parquet directory/file. */
-  def readEvents(spark: SparkSession, pathOrGlob: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(pathOrGlob).schema
-    val raw = spark.readStream.schema(schema).parquet(pathOrGlob)
+  /** Streaming read of an events-shaped parquet directory/file. The
+    * schema probe goes through `Sources.read`, so a directory whose files
+    * have not changed since the last read starts no footer job (a glob
+    * still works; it reads uncached). */
+  def readEvents(spark: SparkSession, path: String): DataFrame = {
+    graft.io.Sources.nanosAsLong(spark)
+    val schema = graft.io.Sources.read(spark, "parquet", path).schema
+    val raw = spark.readStream.schema(schema).parquet(path)
     graft.Tables.normalizeEventTs(raw) // same branch table as the batch reader
   }
 
