@@ -25,8 +25,8 @@ import graft.probe.{OrdLeg, PipeLeg, QueryLegs, ScaleLegs, StreamLeg}
   *  - `jobs`: the construction/force split of each query with its Spark
   *    jobs, `reps` (2) times;
   *  - `explain`: formatted physical plans;
-  *  - `cc`: iterative connected components on a 500k-edge graph,
-  *    checked against the local union-find;
+  *  - `cc`: connected components of a 500k-node graph from a
+  *    1-partition and a default-partitioned input, which must agree;
   *  - `stream`: micro-batch throughput and state size of the stateful
   *    streaming twins;
   *  - `scale`: ×`factor` (10) growth exponents of a query sweep;

@@ -125,9 +125,12 @@ object CacheRegistry {
         if (!cached) p.persist()
         p
       case None =>
-        val p = df.persist()
-        tracked += ((tag, planKey, fileKey, p))
-        p
+        // the same plan may already be cached under another tag (q42's
+        // simhashWordEdges.words and q79's simhashClusters.words over one
+        // corpus): record the tag, but a second persist only warns
+        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
+        tracked += ((tag, planKey, fileKey, df))
+        df
     }
   }
 

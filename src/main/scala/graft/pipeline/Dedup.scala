@@ -1,7 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{BinaryType, DataType, StructType}
 import org.apache.spark.sql.{functions => F}
 
 /** Deduplication operators for training-data pipelines, all shaped for
@@ -578,182 +583,57 @@ object Dedup {
 
   /** Duplicate-cluster resolution: connected components over verified
     * candidate pairs — the final stage of every near-dup pipeline (pick
-    * one keeper per TRANSITIVE duplicate set, not per pair).
+    * one keeper per TRANSITIVE duplicate set, not per pair). Output: one
+    * (id, cluster) row per node, cluster = the least id of its component;
+    * a self-pair (a, a) keeps an isolated node visible.
     *
-    * Scale path: alternating large-star/small-star rounds (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC '14).
-    * Each round is two scalar-only (node, node) aggregations + joins —
-    * payloads never enter the graph, no neighbor lists are ever
-    * collected (high-degree nodes cost nothing extra), and per-round
-    * edge volume never exceeds the input's. Unlike plain min-label
-    * propagation (O(diameter) rounds — the previous implementation,
-    * which needed a raised maxIter on adversarial chain graphs), the
-    * star alternation contracts components in O(log d) rounds; the
-    * fixed point is a star per component centered at its minimum id.
-    * The convergence probe is an edge-set-unchanged check that rides
-    * one outer join per round.
+    * One lazy plan, the same union-find run twice: each input partition
+    * reduces its pairs to a forest of (node, root) rows, at most one row
+    * per node it saw, and one task after `repartition(1)` merges the
+    * forests. Building it starts no Spark job and sets no conf. Union by
+    * minimum (the smaller root always wins) leaves every root at its
+    * component minimum, so no relabelling pass follows. Ids compare under
+    * Spark's ordering of their type — the order `min`/`least` use (UTF-8
+    * byte order for strings, not `String.compareTo`) — and keep the
+    * caller's type. Ids need value equality: binary ids are rejected.
     *
-    * Lineage MUST be truncated every round (`localCheckpoint`, eager):
-    * `persist` caches partitions but leaves the LOGICAL plan growing —
-    * each round references the previous several times, so by round ~8
-    * Catalyst is cloning an exponentially-sized tree and the driver
-    * burns minutes of CPU in `TreeNode.clone` (observed: 340 s of
-    * driver CPU at a mere 2k-node graph). With the checkpoint each
-    * round's plan is O(1): scans of materialized RDDs. On a cluster
-    * prefer `checkpoint` to HDFS for fault tolerance; same shape. */
+    * Scale bound: the merge task holds one map entry per distinct node,
+    * and the per-partition pass caps its input at partitions × nodes
+    * rows (the largest graph on record, q58 at ×300, has 600k nodes). */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b", maxIter: Int = 20,
-                          requireConvergence: Boolean = true,
-                          localSolveMaxEdges: Long = 2000000L,
-                          onStarRounds: Int => Unit = _ => ()): DataFrame = {
-    val spark = pairs.sparkSession
-    val idType = pairs.select(F.col(idA)).schema.head.dataType
-    // Canonicalize each pair to (least, greatest) — self-pairs survive,
-    // so isolated nodes (a,a) still get a label — and materialize ONCE.
-    // Every downstream consumer (the size probe, the local collect, the
-    // star rounds, allNodes) reads this RDD, so the expensive upstream
-    // (LSH candidate generation + verification) never recomputes. This
-    // matters doubly: a limit-collect probe straight over the un-
-    // materialized plan re-executes the upstream incrementally AND the
-    // iterative path would pay it again (measured: q58's 10× probe run
-    // went 24 s → 423 s without this checkpoint). Also half the
-    // materialized volume of the previous both-directions `edges`
-    // checkpoint.
-    val canon = pairs
-      .select(F.least(F.col(idA), F.col(idB)).as("a"),
-              F.greatest(F.col(idA), F.col(idB)).as("b"))
-      .localCheckpoint(true)
-    // Size-gated local solve — the broadcast-join trick applied to
-    // graphs: the verified near-dup graph is TINY relative to the
-    // corpus (only documents with a confirmed near-duplicate appear at
-    // all), so below a threshold union-find on the driver replaces
-    // O(rounds) Spark jobs with the materialization above plus one
-    // cheap collect of the checkpointed rows. The threshold counts
-    // DIRECTED edges = 2× input pairs; 2M ≈ 32 MB of longs — far under
-    // any driver budget. Integral id types only — string/decimal ids
-    // take the type-agnostic iterative path (star rounds work on any
-    // ordered type; a long cast would corrupt them).
-    val integralIds = Seq("byte", "short", "integer", "long")
-      .contains(idType.typeName)
-    val pairCap = localSolveMaxEdges / 2
-    if (integralIds && pairCap < Int.MaxValue) {
-      val probe = canon
-        .select(F.col("a").cast("long"), F.col("b").cast("long"))
-        .limit(pairCap.toInt + 1).collect()
-      if (probe.length <= pairCap) {
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x // path compression
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        probe.foreach { row =>
-          val (a, b) = (row.getLong(0), row.getLong(1))
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        // resolve every node to the MIN id of its component — identical
-        // semantics to min-label propagation
-        val roots = parent.keys.toArray.map(k => (k, find(k)))
-        val minOfRoot = roots.groupBy(_._2).map { case (r, ks) => r -> ks.map(_._1).min }
-        import spark.implicits._
-        onStarRounds(0)
-        // cast back to the caller's id type so both solve paths emit the
-        // same schema regardless of which side of the gate the graph hit
-        return roots.map { case (k, r) => (k, minOfRoot(r)) }.toSeq
-          .toDF("id", "cluster")
-          .select(F.col("id").cast(idType), F.col("cluster").cast(idType))
-      }
+                          idB: String = "id_b"): DataFrame = {
+    val canon = pairs.select(F.least(F.col(idA), F.col(idB)).as("id"),
+      F.greatest(F.col(idA), F.col(idB)).as("cluster"))
+    val id = canon.schema.head
+    require(id.dataType != BinaryType, "connectedComponents: binary ids have no value equality")
+    val out = Encoders.row(StructType(Seq(id, id.copy(name = "cluster"))))
+    canon.mapPartitions(unionFind(id.dataType) _)(out)
+      .repartition(1)
+      .mapPartitions(unionFind(id.dataType) _)(out)
+  }
+
+  /** Union-find over (a, b) rows, union by minimum under Spark's ordering
+    * of `dt`: one (node, component minimum) row per node seen. Nodes are
+    * keyed by their Catalyst value (a `UTF8String` for a string id). A
+    * null id only ever pairs with itself (`least`/`greatest` skip
+    * nulls), so it stays its own root and is never compared. */
+  private def unionFind(dt: DataType)(rows: Iterator[Row]): Iterator[Row] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    val ord = PhysicalDataType.ordering(dt)
+    val parent = new java.util.HashMap[Any, Any]
+    def find(x0: Any): Any = { // path halving
+      var x = x0
+      while (parent.get(x) != x) { parent.put(x, parent.get(parent.get(x))); x = parent.get(x) }
+      x
     }
-    // The loop's frames are (id, label) scalars. At that size the cost
-    // is pure per-job/per-task overhead, and AQE makes it WORSE: every
-    // stage materialization is an extra driver round (measured ~3 s/
-    // iteration of fixed overhead on a 1.2k-node graph, 5× worse late
-    // in a many-query session). Pin a small fixed shuffle width and let
-    // AQE back on afterwards. On a cluster with a big graph, raise the
-    // pinned width with graph size — the shape holds.
-    val oldAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val oldParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      // All nodes (so self-pairs/isolated ids still get a label), and
-      // the canonical (a < b) simple-edge set the star rounds operate
-      // on — both derived from the checkpointed `canon`, never from the
-      // raw upstream plan.
-      val allNodes = canon.select(F.col("a").as("id"))
-        .union(canon.select(F.col("b").as("id"))).distinct()
-        .localCheckpoint(true)
-      var e = canon.filter(F.col("a") =!= F.col("b"))
-        .distinct().localCheckpoint(true)
-      var converged = false
-      var i = 0
-      // A nonempty simple-edge set NEVER becomes empty under the star
-      // phases (every edge (a,b), a<b contributes a canonical emission
-      // in each phase), so emptiness is checked ONCE here instead of
-      // paying a limit(1) job per round (r05 verdict: batch the probes).
-      var nonEmpty = e.limit(1).count() > 0
-      while (!converged && nonEmpty && i < maxIter) {
-        // Large-star: for every node u, hang each LARGER neighbor v off
-        // m(u) = min(Γ(u) ∪ {u}). m ≤ u < v, so (m, v) is already
-        // canonical. One aggregation for m, one join — no neighbor
-        // lists, so a million-degree hub costs the same per edge as a
-        // chain link.
-        val bidir = e.select(F.col("a").as("u"), F.col("b").as("v"))
-          .union(e.select(F.col("b").as("u"), F.col("a").as("v")))
-        val mL = bidir.groupBy("u").agg(F.least(F.min("v"), F.col("u")).as("m"))
-        // persist, not localCheckpoint: e1 lives only inside this round
-        // (e2 checkpoints below, so lineage stays O(1) across rounds)
-        // and persist is plan-time free — dropping e1's materializing
-        // checkpoint halves the per-round job count, which is the
-        // dominant cost on small graphs (r05 verdict item 7). Its two
-        // consumers (mS, leaves) share the cached partitions.
-        val e1 = bidir.join(mL, "u").filter(F.col("v") > F.col("u"))
-          .select(F.col("m").as("a"), F.col("v").as("b"))
-          .filter(F.col("a") =!= F.col("b"))
-          .distinct().persist()
-        // Small-star: direct edges large→small; hang every smaller
-        // neighbor (and u itself) off m(u) = min(Γ≤(u)). Again m < v
-        // keeps emissions canonical.
-        val dirDown = e1.select(F.col("b").as("u"), F.col("a").as("v"))
-        val mS = dirDown.groupBy("u").agg(F.min("v").as("m"))
-        val leaves = dirDown.join(mS, "u")
-          .filter(F.col("v") =!= F.col("m"))
-          .select(F.col("m").as("a"), F.col("v").as("b"))
-        val centers = mS.filter(F.col("u") =!= F.col("m"))
-          .select(F.col("m").as("a"), F.col("u").as("b"))
-        val e2 = leaves.union(centers).distinct().localCheckpoint(true)
-        e1.unpersist(false)
-        // Fixed point ⟺ the edge set survived a full round unchanged
-        // (stars centered at component minima are stable under both
-        // phases). One outer join; edge frames are scalar pairs.
-        converged = e2.withColumn("__l", F.lit(1))
-          .join(e.withColumn("__r", F.lit(1)), Seq("a", "b"), "full_outer")
-          .filter(F.col("__l").isNull || F.col("__r").isNull)
-          .limit(1).count() == 0
-        e = e2
-        i += 1
-      }
-      onStarRounds(i)
-      // Exiting via the iteration cap means labels are WRONG (some nodes
-      // not yet hanging off their component minimum) — never return that
-      // silently.
-      if (!converged && nonEmpty && requireConvergence)
-        throw new IllegalStateException(
-          s"connectedComponents: not converged after $maxIter star rounds; " +
-          "raise maxIter or pass requireConvergence=false to accept " +
-          "partial labels")
-      // Star state: every edge is (component-min, member).
-      e.select(F.col("b").as("id"), F.col("a").as("cluster"))
-        .union(allNodes.select(F.col("id"), F.col("id").as("cluster")))
-        .groupBy("id").agg(F.min("cluster").as("cluster"))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", oldParts)
+    rows.foreach { r =>
+      val (a, b) = (toCatalyst(r.get(0)), toCatalyst(r.get(1)))
+      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
     }
+    parent.keySet.asScala.iterator.map(k => Row(toScala(k), toScala(find(k))))
   }
 
   /** 64-bit SimHash kernel: per token, ±1 into 64 bit-sums; sign bits

@@ -86,9 +86,11 @@ object QueryLegs {
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }
 
-  /** Connected components forced down the iterative scale path on
-    * 100k chains of 5 plus 50k random cross edges (components of widely
-    * varying size and diameter), then compared with the local solve. */
+  /** Connected components of 100k chains of 5 plus 50k random cross
+    * edges (components of widely varying size and diameter), solved once
+    * from a 1-partition input and once from the session's default
+    * partitioning; the seconds cover build and forced checksum, and the
+    * two labellings must agree. */
   def cc(spark: SparkSession, a: Args): Unit = {
     val chains = spark.range(500000L)
       .select(F.col("id").as("id_a"), (F.col("id") + 1).as("id_b"))
@@ -97,16 +99,18 @@ object QueryLegs {
       F.abs(F.xxhash64(F.col("id")) % 500000L).as("id_a"),
       F.abs(F.xxhash64(F.col("id") + 7L) % 500000L).as("id_b"))
     val pairs = chains.union(rnd)
-    val t0 = System.nanoTime()
-    var rounds = -1
-    val labels = graft.pipeline.Dedup.connectedComponents(pairs, localSolveMaxEdges = 0,
-      maxIter = 60, onStarRounds = r => rounds = r)
-    val (rows, sum) = checksum(labels)
-    val clusters = labels.select(F.countDistinct("cluster")).head().getLong(0)
-    println(f"cc rows=$rows sum=$sum clusters=$clusters rounds=$rounds ${secs(t0)}%.1f s")
-    val local = graft.pipeline.Dedup.connectedComponents(pairs)
-    val diff = labels.as("a").join(local.as("b"), "id")
+    val Seq(one, default) = Seq("one" -> pairs.repartition(1), "default" -> pairs).map {
+      case (tag, input) =>
+        val t0 = System.nanoTime()
+        val labels = graft.pipeline.Dedup.connectedComponents(input)
+        val (rows, sum) = checksum(labels)
+        val s = secs(t0)
+        val clusters = labels.select(F.countDistinct("cluster")).head().getLong(0)
+        println(f"cc $tag rows=$rows sum=$sum clusters=$clusters $s%.1f s")
+        labels
+    }
+    val diff = one.as("a").join(default.as("b"), "id")
       .filter(F.col("a.cluster") =!= F.col("b.cluster")).count()
-    println(s"cc mismatches_vs_local=$diff")
+    println(s"cc mismatches=$diff")
   }
 }

@@ -517,17 +517,26 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       20L -> 1L, 21L -> 1L, 10L -> 10L, 11L -> 10L), got.toString)
+    // building over a pair frame with a shuffle upstream starts no Spark
+    // job, and building and forcing it leaves the session conf as it was
+    val conf = spark.conf.getAll
+    val (shuffled, jobs) =
+      TestSpark.built(Dedup.connectedComponents(pairs.groupBy("id_a", "id_b").count()))
+    assert(jobs == 0, s"building connectedComponents ran $jobs jobs")
+    assert(shuffled.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == got)
+    assert(spark.conf.getAll == conf)
   }
 
   test("connectedComponents: local union-find and iterative paths agree") {
     // adversarial long chain (diameter 40) plus separate components —
-    // stresses path compression on the iterative side
+    // spread over 7 partitions, the per-partition forests only join up
+    // in the merge task; one partition solves it in the first pass
     val chain = (0L until 40L).map(i => (i, i + 1))
     val extra = Seq((100L, 101L), (101L, 102L), (200L, 201L))
     val pairs = (chain ++ extra).toDF("id_a", "id_b")
-    val local = Dedup.connectedComponents(pairs) // small => local solve
+    val local = Dedup.connectedComponents(pairs.repartition(1))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val iter = Dedup.connectedComponents(pairs, localSolveMaxEdges = 0) // force iterative
+    val iter = Dedup.connectedComponents(pairs.repartition(7))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == iter, s"paths disagree: local=$local iter=$iter")
     assert((0L to 40L).forall(local(_) == 0L))
@@ -535,19 +544,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(local(201L) == 200L)
     // both paths must emit the caller's id type (int ids stay int)
     val intPairs = Seq((1, 2), (2, 3)).toDF("id_a", "id_b")
-    val sLocal = Dedup.connectedComponents(intPairs).schema.map(_.dataType)
-    val sIter = Dedup.connectedComponents(intPairs, localSolveMaxEdges = 0)
+    val sLocal = Dedup.connectedComponents(intPairs.repartition(1)).schema.map(_.dataType)
+    val sIter = Dedup.connectedComponents(intPairs.repartition(7))
       .schema.map(_.dataType)
     assert(sLocal == sIter, s"schema drift across solve paths: $sLocal vs $sIter")
-    // string ids (e.g. md5 content keys) must NOT take the long-casting
-    // local path — the type-agnostic iterative solve handles them
+    // string ids (e.g. md5 content keys) are never cast to long
     val strPairs = Seq(("docA", "docB"), ("docB", "docC"), ("x", "y"))
       .toDF("id_a", "id_b")
     val strGot = Dedup.connectedComponents(strPairs).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(strGot == Map("docA" -> "docA", "docB" -> "docA", "docC" -> "docA",
       "x" -> "x", "y" -> "x"), strGot.toString)
-    // self-pairs keep isolated nodes visible on the local path
+    // labels follow Spark's min, UTF-8 byte order: U+FFFD (EF ..) sorts
+    // before an emoji (F0 ..), though String.compareTo (UTF-16) says after
+    val (rep, emoji) = ("\uFFFD", "\uD83D\uDE00")
+    assert(emoji.compareTo(rep) < 0)
+    val uniPairs = Seq((emoji, rep)).toDF("id_a", "id_b")
+    assert(uniPairs.select(F.least($"id_a", $"id_b")).head().getString(0) == rep)
+    val uniGot = Dedup.connectedComponents(uniPairs).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(uniGot == Map(rep -> rep, emoji -> rep), uniGot.toString)
+    // self-pairs keep isolated nodes visible
     val selfPairs = Seq((5L, 5L), (7L, 8L)).toDF("id_a", "id_b")
     val selfGot = Dedup.connectedComponents(selfPairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -1,14 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.built
 import graft.io.{Sources, TadaIO}
 
 /** `Sources.read`: a repeat read of unchanged files reuses the inferred
@@ -20,20 +18,6 @@ class SourcesSpec extends AnyFunSuite {
 
   private def dir(): Path = Files.createTempDirectory("graft-sources")
 
-  /** What `body` builds and the Spark jobs started while building it. */
-  private def built[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val df = body
-      ListenerBusDrain(spark.sparkContext)
-      (df, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.mkString("|")).toSeq.sorted
 
