@@ -40,7 +40,6 @@ import graft.probe.{OrdLeg, PipeLeg, QueryLegs, ScaleLegs, StreamLeg}
 object Probe {
   private val Partitions = "spark.sql.shuffle.partitions"
   private val Fixed32 = Map(Partitions -> "32")
-  private val MaxPairs = "graft.containment.maxPairs" -> "500000000"
 
   val Scratch: String = s"${sys.props("java.io.tmpdir")}/graft-probe"
 
@@ -51,12 +50,8 @@ object Probe {
     "explain" -> ((Map(Partitions -> "8"), QueryLegs.explain)),
     "cc" -> ((Fixed32, QueryLegs.cc)),
     "stream" -> ((Map(Partitions -> "16"), StreamLeg.run)),
-    // the exact-verify broadcast budget is starved so the shuffled
-    // fallback branch runs at corpus sizes one host can build
-    "scale" -> ((Fixed32 + MaxPairs +
-      ("graft.broadcastVecMaxBytes" -> (128L << 20).toString), ScaleLegs.scale)),
-    "docs" -> ((Fixed32 + MaxPairs + ("graft.containment.maxSideAWaves" -> "1024") +
-      ("graft.containment.waveDir" -> s"$Scratch/waves"), ScaleLegs.docs)),
+    "scale" -> ((Fixed32, ScaleLegs.scale)),
+    "docs" -> ((Fixed32 + ("graft.containment.waveDir" -> s"$Scratch/waves"), ScaleLegs.docs)),
     "vecs" -> ((Fixed32, ScaleLegs.vecs)),
     "ord" -> ((Fixed32, OrdLeg.run)),
     "pipe" -> ((Fixed32 + ("graft.containment.waveDir" -> s"$Scratch/waves"), PipeLeg.run)))

@@ -120,7 +120,7 @@ object Analytics {
         Some((Prefix.tsMicros(v, dt).cast(DoubleType), None))
       case DateType      => Some((F.unix_date(v).cast(DoubleType), None))
       case StringType =>
-        Prefix.BoundsCache.stringBounds(f.df.select(v.as("__pfx_k"))).flatMap {
+        Estimates.stringBounds(f.df.select(v.as("__pfx_k"))).flatMap {
           case (Some(mn), Some(mx), _, dRaw) =>
             Some((Prefix.stringImageExpr(v, mn, mx), Some(dRaw)))
           case _ => None // all-null string column: window form is trivial
@@ -148,7 +148,7 @@ object Analytics {
       // partial-composition invariant), injected as an array literal so
       // both consumers of the chunked frame agree even on recompute;
       // quantile approximation error only unbalances chunks.
-      Prefix.BoundsCache.quantStats(f.df.select(clean.as("__pfx_k")), k).flatMap {
+      Estimates.quantStats(f.df.select(clean.as("__pfx_k")), k).flatMap {
         case (Some(_), Some(_), d, qs) =>
           val nb = qs.length // chunk ids 0..nb for finite values
           // O(log k) binary-search chunk id with the standard NaN/±Inf
@@ -274,7 +274,7 @@ object Analytics {
     * image are exactly that): the global rank of a row is its dense
     * rank WITHIN its chunk plus the number of distinct values in all
     * lower chunks. So: bucket rows by value ([[valueAxis]] — memoized
-    * bounds as literals, the BoundsCache discipline), run dense_rank
+    * bounds as literals, the Estimates discipline), run dense_rank
     * inside each (partition, chunk) — parallel, one hash exchange —
     * aggregate per-chunk DISTINCT counts into a tiny #chunks-row frame,
     * exclusive-prefix it, and join the offsets back. Versus the global

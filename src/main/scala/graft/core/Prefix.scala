@@ -43,7 +43,7 @@ import org.apache.spark.sql.types._
   *     via the O(log k) `boundary_bucket` expression; was equi-width
   *     [min,max] spans, which a heavy-tailed key collapses into one
   *     chunk). One memoized bounds job per (plan, file state) per
-  *     session — [[Prefix.BoundsCache]] — injected as literals; the
+  *     session — [[Estimates.quantStats]] — injected as literals; the
   *     lazy width-bucket broadcast-crossJoin form survives only as the
   *     job-failure fallback. Equal keys land in one chunk; the
   *     within-chunk window orders by the FULL key so chunk granularity
@@ -172,7 +172,7 @@ object Prefix {
         Some(tsMicros(c, dt).cast(DoubleType))
       case DateType                     => Some(F.unix_date(c).cast(DoubleType))
       case StringType =>
-        BoundsCache.stringBounds(f.df.select(c.as("__pfx_k"))).map {
+        Estimates.stringBounds(f.df.select(c.as("__pfx_k"))).map {
           case (Some(mn), Some(mx), _, _) => stringImageExpr(c, mn, mx)
           case _ => F.lit(null).cast(DoubleType) // all-null column
         }
@@ -216,217 +216,6 @@ object Prefix {
   /** First-sort-key image — the primary chunking axis. */
   private def bucketScale(f: TadaFrame): Option[Column] =
     bucketScaleOf(f, f.order.head)
-
-  /** Session memo for the sorted-frame chunking's bucket bounds (r15
-    * verdict item 5): `anchorOrder`/`materializeOrd` and every chunked
-    * prefix op on a sorted frame need (min, max) of the first sort key —
-    * the pre-r16 plan carried the aggregate as a lazy broadcast-crossJoin
-    * subtree, re-EXECUTED by every consumer of the chunked frame and by
-    * every repeated anchor on the same frame. One bounds job per
-    * (analyzed plan, file state) per session (the r13 memo-key
-    * discipline: the key comes from the ANALYZED plan — an
-    * optimized-plan key changes with cache state and collided in r13's
-    * disk-fill incident); values are injected as literals. `None` on
-    * job failure — callers keep the lazy form, the memo is never
-    * load-bearing. */
-  private[graft] object BoundsCache {
-    /** Bounded LRU (r16 ADVICE): the keys retain full ANALYZED plan
-      * trees plus file listings, so an unbounded map grows driver
-      * memory for the session lifetime under fuzz sweeps / notebooks /
-      * registry services — same memo role and same fix as
-      * `Similarity.countCache` (synchronized insertion-order
-      * LinkedHashMap, eldest-out past the cap). */
-    private val MaxEntries = 256
-    private def lru[V](): java.util.Map[(AnyRef, String), V] =
-      java.util.Collections.synchronizedMap(
-        new java.util.LinkedHashMap[(AnyRef, String), V](64, 0.75f, false) {
-          override def removeEldestEntry(
-              e: java.util.Map.Entry[(AnyRef, String), V]): Boolean =
-            size() > MaxEntries
-        })
-    private val cache = lru[(Option[Double], Option[Double], Double)]()
-    private val vcache = lru[Array[Double]]()
-    private val hitCtr = new java.util.concurrent.atomic.AtomicLong
-    /** Memo hits so far — PrefixSpec asserts re-anchors are scan-free. */
-    private[graft] def hits: Long = hitCtr.get
-    /** STRUCTURAL plan key + field names + file state — the shared
-      * [[PlanKey]] discipline (a rendered plan string prints only the
-      * schema for in-memory leaves and would collide; stale bounds stay
-      * order-monotone, so a collision here degrades BALANCE, never
-      * correctness — still a silent parallelism trap). */
-    private def key(sel: DataFrame): (AnyRef, String) = PlanKey.of(sel)
-    /** (min, max, approx distinct) of `sel`'s single double column in
-      * ONE map-side-cheap pass (HLL for the distinct — deterministic for
-      * fixed data, only gates an optimization). Inner Options are the
-      * all-null corpus. No lock across the job — a racing duplicate
-      * bounds job is harmless, a blocked construction thread is not. */
-    def stats(sel: DataFrame): Option[(Option[Double], Option[Double], Double)] =
-      try {
-        val k = key(sel)
-        val hit = cache.get(k)
-        if (hit != null) { hitCtr.incrementAndGet(); Some(hit) }
-        else {
-          val c = sel.columns.head
-          val r = sel.agg(F.min(F.col(c)), F.max(F.col(c)),
-            F.approx_count_distinct(F.col(c))).head()
-          val v = (if (r.isNullAt(0)) None else Some(r.getDouble(0)),
-            if (r.isNullAt(1)) None else Some(r.getDouble(1)),
-            r.getLong(2).toDouble)
-          cache.put(k, v)
-          Some(v)
-        }
-      } catch { case _: Throwable => None }
-
-    /** The ≤ `cap` SORTED distinct non-null values of `sel`'s single
-      * double column, memoized — the low-cardinality chunking's value
-      * vocabulary. Empty array = over cap (the limit(cap+1) collect saw
-      * more) or genuinely empty; callers treat both as "don't engage".
-      * Driver-bounded by construction: cap+1 doubles. `cap` is part of
-      * the memo key (r18 ADVICE): a mid-session shuffle-partition change
-      * changes lowCardChunk's effective cap, and a cached over-cap empty
-      * array from the old cap would otherwise disengage value-chunking
-      * permanently (perf only — chunk ids stay correct — but silent). */
-    def distinctValues(sel: DataFrame, cap: Int): Option[Array[Double]] =
-      try {
-        val k0 = key(sel)
-        val k = (k0._1, k0._2 + "|cap=" + cap)
-        val hit = vcache.get(k)
-        if (hit != null) { hitCtr.incrementAndGet(); Some(hit) }
-        else {
-          val c = sel.columns.head
-          val got = sel.filter(F.col(c).isNotNull).distinct()
-            .limit(cap + 1).collect().map(_.getDouble(0))
-          val v = if (got.length > cap) Array.empty[Double] else got.sorted
-          vcache.put(k, v)
-          Some(v)
-        }
-      } catch { case _: Throwable => None }
-
-    private val scache = lru[(Option[String], Option[String], Long, Double)]()
-
-    /** (min, max, max octet length, approx distinct) of `sel`'s single
-      * STRING column in one memoized pass — the anchors of the string
-      * sort key's binary-prefix image (r17) plus the RAW-value
-      * cardinality that gates string value-chunking (r18: the image's
-      * HLL under-counts whenever the 6-byte window collides, so the
-      * engagement gate must read the raw column). Inner Nones are the
-      * all-null corpus; `None` on job failure (callers keep the
-      * no-image fallback). */
-    def stringBounds(sel: DataFrame): Option[(Option[String], Option[String], Long, Double)] =
-      try {
-        val k = key(sel)
-        val hit = scache.get(k)
-        if (hit != null) { hitCtr.incrementAndGet(); Some(hit) }
-        else {
-          val c = sel.columns.head
-          val r = sel.agg(F.min(F.col(c)), F.max(F.col(c)),
-            F.max(F.octet_length(F.col(c))),
-            F.approx_count_distinct(F.col(c))).head()
-          val v = (if (r.isNullAt(0)) None else Some(r.getString(0)),
-            if (r.isNullAt(1)) None else Some(r.getString(1)),
-            if (r.isNullAt(2)) 0L else r.getInt(2).toLong,
-            r.getLong(3).toDouble)
-          scache.put(k, v)
-          Some(v)
-        }
-      } catch { case _: Throwable => None }
-
-    private val svcache = lru[Array[String]]()
-
-    /** The ≤ `cap` distinct non-null STRING values of `sel`'s single
-      * column, sorted in UTF-8 BYTE order (Spark's string comparison —
-      * `String.compareTo`'s UTF-16 code-unit order disagrees for
-      * supplementary characters, which would scramble the ascending
-      * chunk-index invariant), memoized. Empty array = over cap or
-      * genuinely empty; callers treat both as "don't engage". `cap` is
-      * part of the memo key — same rationale as [[distinctValues]]. */
-    def distinctStrings(sel: DataFrame, cap: Int): Option[Array[String]] =
-      try {
-        val k0 = key(sel)
-        val k = (k0._1, k0._2 + "|cap=" + cap)
-        val hit = svcache.get(k)
-        if (hit != null) { hitCtr.incrementAndGet(); Some(hit) }
-        else {
-          val c = sel.columns.head
-          val got = sel.filter(F.col(c).isNotNull).distinct()
-            .limit(cap + 1).collect().map(_.getString(0))
-          val v = if (got.length > cap) Array.empty[String]
-            else got.sorted(Utf8Order)
-          svcache.put(k, v)
-          Some(v)
-        }
-      } catch { case _: Throwable => None }
-
-    private val dcache = lru[java.lang.Double]()
-
-    /** Approximate distinct count of `sel`'s single column (ANY type —
-      * HLL hashes structs too), memoized — the dispatch gate for plans
-      * whose break-even depends on cardinality (banded rankRep: #groups;
-      * keyed rollingDuration: #keys). One map-side-combined pass;
-      * deterministic for fixed data; `None` on job failure (callers keep
-      * their default plan — never load-bearing). */
-    def approxDistinct(sel: DataFrame): Option[Double] =
-      try {
-        val k = key(sel)
-        val hit = dcache.get(k)
-        if (hit != null) { hitCtr.incrementAndGet(); Some(hit.doubleValue()) }
-        else {
-          val c = sel.columns.head
-          val v = sel.agg(F.approx_count_distinct(F.col(c))).head().getLong(0).toDouble
-          dcache.put(k, java.lang.Double.valueOf(v))
-          Some(v)
-        }
-      } catch { case _: Throwable => None }
-
-    private val qcache = lru[(Option[Double], Option[Double], Double, Array[Double])]()
-
-    /** (min, max, approx distinct, ~equi-depth interior boundaries) of
-      * `sel`'s single double column in ONE memoized pass — the chunk
-      * axis for the value/time chunked plans (r19, r18 verdict item 2:
-      * equi-WIDTH buckets over min/max silently collapse a heavy-tailed
-      * value column or a bursty time axis into a few chunks — the exact
-      * single-partition shape the chunked plans exist to remove).
-      * Boundaries are `approx_percentile` at i/n for i in 1..n−1,
-      * deduped and strictly inside (min, max), so ~equal ROW COUNTS land
-      * between consecutive boundaries regardless of the distribution;
-      * a chunk id derived as "boundaries ≤ v" stays a pure monotone
-      * function of the value (equal values share a chunk — the partial-
-      * composition invariant is untouched; only BALANCE changes).
-      * Approximation error only unbalances chunks, never breaks
-      * correctness. `n` is part of the memo key. Inner Nones = all-null
-      * column; `None` on job failure. */
-    def quantStats(sel: DataFrame, n: Int):
-        Option[(Option[Double], Option[Double], Double, Array[Double])] =
-      try {
-        val k0 = key(sel)
-        val k = (k0._1, k0._2 + "|nq=" + n)
-        val hit = qcache.get(k)
-        if (hit != null) { hitCtr.incrementAndGet(); Some(hit) }
-        else {
-          val c = sel.columns.head
-          val fracs = (1 until n).map(i => i.toDouble / n)
-          val r = sel.agg(F.min(F.col(c)), F.max(F.col(c)),
-            F.approx_count_distinct(F.col(c)),
-            F.percentile_approx(F.col(c),
-              F.lit(fracs.toArray), F.lit(10000))).head()
-          val mn = if (r.isNullAt(0)) None else Some(r.getDouble(0))
-          val mx = if (r.isNullAt(1)) None else Some(r.getDouble(1))
-          // canonicalized through BoundaryBucket.prepare (ADVICE r19):
-          // boxed Array.distinct can keep a −0.0/0.0 pair that prepare
-          // would later merge inside the expression, leaving qs.length
-          // an over-count of the realized finite chunk ids — prepare
-          // here (sorted, −0.0-normalized, deduped under Double.compare)
-          // so the callers' `nb = qs.length` IS the prepared length
-          val qs: Array[Double] =
-            if (r.isNullAt(3) || mn.isEmpty || mx.isEmpty) Array.empty
-            else graft.exprs.BoundaryBucket.prepare(r.getSeq[Double](3).toArray)
-              .filter(b => b > mn.get && b < mx.get)
-          val v = (mn, mx, r.getLong(2).toDouble, qs)
-          qcache.put(k, v)
-          Some(v)
-        }
-      } catch { case _: Throwable => None }
-  }
 
   /** Unsigned UTF-8 byte-lexicographic ordering — exactly Spark's
     * UTF8String comparison, which is what every string sort key and
@@ -491,7 +280,7 @@ object Prefix {
       // pure monotone function of the key value, equal keys share a
       // chunk, boundaries memoized + injected as literals so both
       // consumers of a chunked frame agree even on recompute.
-      BoundsCache.quantStats(f.df.select(keyClean.as("__pfx_k")), k) match {
+      Estimates.quantStats(f.df.select(keyClean.as("__pfx_k")), k) match {
         case Some((mnV, _, dApprox, qs)) =>
           // r18: value-chunking joins the vocabulary on the RAW key
           // value (strings included), so it no longer needs an
@@ -541,7 +330,7 @@ object Prefix {
     * exact, not width-approximate, because a bucket that MIXES two key
     * values cannot be sub-banded (the band would reorder rows across
     * the two values). Engagement and all stats are memoized session
-    * jobs ([[BoundsCache]]); any failure returns None and the caller
+    * jobs ([[Estimates]]); any failure returns None and the caller
     * keeps the width-bucket plan — never load-bearing. */
   /** TEST SEAM: overrides the memoized vocabulary for the next
     * [[lowCardChunk]] builds, so the vocabulary-miss pin (reachable
@@ -573,7 +362,7 @@ object Prefix {
     val rawKey = { val c0 = f.df(s1.name); s1.cast.map(c0.cast).getOrElse(c0) }
     val dGate =
       if (!isStr) dApprox
-      else BoundsCache.stringBounds(f.df.select(rawKey.as("__pfx_k")))
+      else Estimates.stringBounds(f.df.select(rawKey.as("__pfx_k")))
         .map(_._4).getOrElse(return None)
     if (maxEngage < 1 || dGate < 1 || dGate > maxEngage * 1.1) return None
     // the tie sub-band axis: (double image, its descending flag, image
@@ -589,10 +378,10 @@ object Prefix {
     val img2Clean = F.when(nonFinite2, F.lit(null)).otherwise(img2)
     val values: Array[Any] = testVocabOverride.getOrElse {
       if (isStr)
-        BoundsCache.distinctStrings(f.df.select(rawKey.as("__pfx_k")), maxEngage)
+        Estimates.distinctStrings(f.df.select(rawKey.as("__pfx_k")), maxEngage)
           .getOrElse(return None).toArray[Any]
       else
-        BoundsCache.distinctValues(f.df.select(keyClean.as("__pfx_k")), maxEngage)
+        Estimates.distinctValues(f.df.select(keyClean.as("__pfx_k")), maxEngage)
           .getOrElse(return None).toArray[Any]
     }
     if (values.isEmpty) return None // over cap (approx under-counted) or empty
@@ -614,7 +403,7 @@ object Prefix {
     // the tie (both sort directions) → fixed top band sub−1 (≥ every
     // finite band); NaN/+Inf top finite, −Inf bottom, flipped on the s2
     // axis' own direction.
-    val qs2 = BoundsCache
+    val qs2 = Estimates
       .quantStats(f.df.select(img2Clean.as("__pfx_k")), sub)
       .getOrElse(return None)._4
     val nb2 = qs2.length // finite bands 0..nb2; nb2 <= sub - 1
@@ -772,7 +561,7 @@ object Prefix {
   private[core] def fewKeys(f: TadaFrame, keys: Seq[String]): Boolean = {
     val kConf = f.df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "200").toInt.max(1)
-    BoundsCache.approxDistinct(
+    Estimates.approxDistinct(
       f.df.select(F.struct(keys.map(f.df(_)): _*).as("__pfx_k")))
       .exists(_ < kConf)
   }

@@ -151,7 +151,7 @@ final case class TadaGrouped(frame: TadaFrame, keys: Seq[String], aligned: Boole
         TadaFormat.rowKey(keys.map(n => (df(n), df.schema(n).dataType)))
       else if (keys.size == 1) df(keys.head)
       else F.struct(keys.map(df(_)): _*)
-    Prefix.BoundsCache.approxDistinct(df.select(keyCol.as("__pfx_k")))
+    Estimates.approxDistinct(df.select(keyCol.as("__pfx_k")))
   }
 
   private def rankRepMaxWindowGroups: Double =
@@ -307,7 +307,7 @@ final case class TadaGrouped(frame: TadaFrame, keys: Seq[String], aligned: Boole
 
   private def medianByValueEligible(c: String): Boolean =
     df.schema(c).dataType.isInstanceOf[NumericType] && {
-      Prefix.BoundsCache.stats(
+      Estimates.stats(
         df.select(df(c).cast(DoubleType).as("__pfx_k"))) match {
         case Some((_, _, d)) => d <= TadaGrouped.MedianVocabCap
         case None => false
@@ -566,7 +566,7 @@ object Rolling {
       }
       val kConf = f.df.sparkSession.conf
         .get("spark.sql.shuffle.partitions", "200").toInt.max(1)
-      val dKeys = Prefix.BoundsCache.approxDistinct(
+      val dKeys = Estimates.approxDistinct(
         f.df.select(F.struct(partitionBy.map(f.df(_)): _*).as("__pfx_k")))
       if (dKeys.exists(_ < kConf))
         rollingDurationChunked(f, tsCol, micros, valCol, agg, out,
@@ -630,7 +630,7 @@ object Rolling {
       .cast(DoubleType)
     val kConf = f.df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "200").toInt.max(1)
-    Prefix.BoundsCache.quantStats(f.df.select(usD.as("__pfx_k")), kConf) match {
+    Estimates.quantStats(f.df.select(usD.as("__pfx_k")), kConf) match {
       case Some((Some(mn), Some(mx), _, qs)) if mx > mn =>
         // keep a quantile boundary only when it sits ≥ 2d from the last
         // kept boundary AND ≥ 2d inside the max — every bucket,

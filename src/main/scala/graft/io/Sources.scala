@@ -1,8 +1,6 @@
 package graft.io
 
 import java.nio.file.{FileVisitOption, Files, Paths}
-import java.nio.file.attribute.BasicFileAttributes
-import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -10,6 +8,8 @@ import scala.util.Try
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+
+import graft.core.{PlanKey, SessionMemo}
 
 /** The one reader of file sources (parquet, CSV, JSON) in library code.
   *
@@ -25,26 +25,25 @@ import org.apache.spark.sql.types.StructType
   * Only the schema is memoized, never the DataFrame: every call builds a
   * fresh relation with fresh attribute ids, so self-joins and `df(col)`
   * resolve as before, and files are listed and read on every call, so
-  * rows are never stale. The key holds a fingerprint of every file under
-  * the path (name, length, modification time; for local files the
-  * nanosecond mtime and the `fileKey` inode too), so any rewrite, even a
-  * same-length one, re-infers. Paths it cannot fingerprint (globs,
-  * missing or empty paths) and empty inferred schemas read uncached.
+  * rows are never stale. The key holds one [[PlanKey.stamp]] per file
+  * under the path (name, length, modification time; for local files the
+  * nanosecond mtime and the `fileKey` inode too), the same file identity
+  * the build-time estimates key on, so any rewrite, even a same-length
+  * one, re-infers. Paths it cannot fingerprint (globs, missing or empty
+  * paths) and empty inferred schemas read uncached.
   *
-  * The memo is per session, an LRU of at most [[MaxSchemas]] schemas.
-  * It holds KBs of `StructType`s and no data, much like the file-listing
-  * cache Spark keeps itself, so `CacheRegistry.releaseAll` leaves it be.
+  * The memo is per session, a [[SessionMemo]] of at most [[MaxSchemas]]
+  * schemas. It holds KBs of `StructType`s and no data, much like the
+  * file-listing cache Spark keeps itself, so `CacheRegistry.releaseAll`
+  * leaves it be.
   */
 object Sources {
   private[graft] val MaxSchemas = 256
 
-  private final case class FileStamp(name: String, length: Long, mtime: Long, fileKey: Any)
   private final case class Key(format: String, path: String, options: Map[String, String],
-                               files: Seq[FileStamp], conf: Map[String, String])
-  private type Memo = java.util.LinkedHashMap[Key, StructType]
+                               files: Seq[String], conf: Map[String, String])
 
-  // session -> LRU memo; weak keys, so a stopped session's memo goes with it
-  private val memos = new java.util.WeakHashMap[SparkSession, Memo]()
+  private val memo = new SessionMemo[Key, StructType](MaxSchemas)
 
   def read(spark: SparkSession, format: String, path: String,
            options: Map[String, String] = Map.empty): DataFrame = {
@@ -53,28 +52,24 @@ object Sources {
       case None => reader.load(path)
       case Some(files) =>
         val key = Key(format, path, options, files, spark.conf.getAll)
-        memos.synchronized(Option(memos.get(spark)).flatMap(m => Option(m.get(key)))) match {
+        memo.get(spark, key) match {
           case Some(schema) => reader.schema(schema).load(path)
           case None =>
             val df = reader.load(path)
-            if (df.schema.nonEmpty) memos.synchronized {
-              memos.computeIfAbsent(spark, _ => new Memo(16, 0.75f, true) {
-                override def removeEldestEntry(e: java.util.Map.Entry[Key, StructType]): Boolean =
-                  size > MaxSchemas
-              }).put(key, df.schema)
-            }
+            if (df.schema.nonEmpty) memo.put(spark, key, df.schema)
             df
         }
     }
   }
 
   /** Schemas the session's memo holds now. */
-  private[graft] def memoSize(spark: SparkSession): Int =
-    memos.synchronized(Option(memos.get(spark)).map(_.size).getOrElse(0))
+  private[graft] def memoSize(spark: SparkSession): Int = memo.size(spark)
 
-  /** Every file under `path`, sorted by name; None for a glob or a path
-    * that lists no file. */
-  private def fingerprint(spark: SparkSession, path: String): Option[Seq[FileStamp]] =
+  /** The stamp of every file under `path`, sorted; None for a glob or a
+    * path that lists no file. Local paths are walked with `java.nio`:
+    * Hadoop's local `listFiles` builds a `LocatedFileStatus` per file,
+    * which loads the file's owner and permissions with a shell command. */
+  private def fingerprint(spark: SparkSession, path: String): Option[Seq[String]] =
     if (path.exists("*?[]{}\\".contains(_))) None
     else Try {
       val p = new Path(path)
@@ -83,15 +78,14 @@ object Sources {
       if (q.toUri.getScheme == "file") {
         val walk = Files.walk(Paths.get(q.toUri), FileVisitOption.FOLLOW_LINKS)
         try walk.iterator.asScala.filter(Files.isRegularFile(_)).map { f =>
-          val a = Files.readAttributes(f, classOf[BasicFileAttributes])
-          FileStamp(f.toString, a.size, a.lastModifiedTime.to(TimeUnit.NANOSECONDS), a.fileKey)
+          PlanKey.stamp(new Path(f.toUri), Files.size(f), Files.getLastModifiedTime(f).toMillis)
         }.toVector finally walk.close()
       } else {
         val it = fs.listFiles(q, true)
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).map(s =>
-          FileStamp(s.getPath.toString, s.getLen, s.getModificationTime, null)).toVector
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(s => PlanKey.stamp(s.getPath, s.getLen, s.getModificationTime)).toVector
       }
-    }.toOption.map(_.sortBy(_.name)).filter(_.nonEmpty)
+    }.toOption.map(_.sorted).filter(_.nonEmpty)
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 

@@ -9,6 +9,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{BinaryType, DataType, StructType}
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Estimates
+
 /** Deduplication operators for training-data pipelines, all shaped for
   * 100 TB:
   *
@@ -166,8 +168,7 @@ object Dedup {
     val nDocs: Long =
       if (estDocs >= 0) estDocs
       else if (estDocs == -2L) -1L
-      else try Similarity.memoizedCount(docs.select(F.col(idCol)))
-      catch { case _: Throwable => -1L }
+      else Estimates.count(docs.select(F.col(idCol))).getOrElse(-1L)
     val estFanout = if (nDocs < 0) -1.0 else nDocs.toDouble * bandsPerDoc
     val w = Explosion.width(estFanout, machine)
     if (w != machine) Explosion.logWidth("candidatePairs", estFanout, w)
@@ -746,9 +747,7 @@ object Dedup {
     val spark = words.sparkSession
     val machine = math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions)
-    val nWords: Long =
-      try Similarity.memoizedCount(words.select(F.col("rep")))
-      catch { case _: Throwable => -1L }
+    val nWords = Estimates.count(words.select(F.col("rep"))).getOrElse(-1L)
     val estFanout = if (nWords < 0) -1.0 else nWords.toDouble * 4
     val w = Explosion.width(estFanout, machine)
     if (w != machine) Explosion.logWidth("wordEdgesFrom", estFanout, w)
@@ -936,36 +935,36 @@ object Dedup {
     try spark.conf.get("graft.containment.maxPairs").toLong
     catch { case _: Throwable => 500000000L }
 
+  /** Row bound for the containment family's conditional broadcasts:
+    * 8M rows of one or two longs, ≈ 128-256 MB. */
+  private val MaxBroadcastRows = 8000000L
+
   /** Conditional broadcast by a memoized row count: hint `frame`
-    * broadcast when `countFrom` has at most `conf`-many rows (counted
-    * once per (plan, file-state) per session). Catalyst cannot size a
-    * post-aggregation frame at plan time, so without the hint these
-    * joins go sort-merge and exchange the BIG side; above the bound the
-    * shuffled join is the honest plan. On count failure the hint is
-    * skipped — never load-bearing. */
-  private def maybeBroadcastByCount(frame: DataFrame, countFrom: DataFrame,
-                                    confKey: String, defaultMax: Long): DataFrame = {
-    val maxRows =
-      try frame.sparkSession.conf.get(confKey).toLong
-      catch { case _: Throwable => defaultMax }
-    val n = try Similarity.memoizedCount(countFrom) catch { case _: Throwable => -1L }
-    if (n >= 0 && n <= maxRows) F.broadcast(frame) else frame
+    * broadcast when `countFrom` has at most [[MaxBroadcastRows]] rows
+    * (counted once per (plan, file-state) per session). Catalyst cannot
+    * size a post-aggregation frame at plan time, so without the hint
+    * these joins go sort-merge and exchange the BIG side; above the
+    * bound the shuffled join is the honest plan. On count failure the
+    * hint is skipped — never load-bearing. */
+  private def maybeBroadcastByCount(frame: DataFrame, countFrom: DataFrame): DataFrame = {
+    val n = Estimates.count(countFrom).getOrElse(-1L)
+    if (n >= 0 && n <= MaxBroadcastRows) F.broadcast(frame) else frame
   }
 
   /** Broadcast the per-doc set-size frame (one 16-byte row per doc)
     * into the containment joins when the doc count is under
-    * `graft.containment.maxBroadcastDocs` (default 8M ≈ 128 MB).
+    * [[MaxBroadcastRows]].
     * Without the hint Catalyst plans BOTH size joins as sort-merge —
     * which re-exchanges AND re-sorts the budget-bound pair stream twice
     * more (the r11 probe measured ~3× the pair-exchange bytes on disk
     * from exactly this). */
   private def maybeBroadcastSizes(sizes: DataFrame, countFrom: DataFrame): DataFrame =
-    maybeBroadcastByCount(sizes, countFrom, "graft.containment.maxBroadcastDocs", 8000000L)
+    maybeBroadcastByCount(sizes, countFrom)
 
   /** Broadcast a vocabulary-keyed frame (per-gram df counts, kept-gram
     * key sets) into a join against a corpus-sized gram explosion when
-    * the vocabulary is under `graft.containment.maxBroadcastVocab`
-    * rows (default 8M ≈ 128-256 MB of (g, df) longs). The r11 100×
+    * the vocabulary is under [[MaxBroadcastRows]] rows of (g, df)
+    * longs. The r11 100×
     * probe found the un-hinted form DOMINATES the containment family's
     * wall-clock: Catalyst plans gram-explosion ⋈ vocabulary as
     * sort-merge and exchanges the full 5×10^8-row explode (~12 GB per
@@ -974,7 +973,7 @@ object Dedup {
     * there the exchange is the honest plan, or the vocabulary lives in
     * a bucketed store and the join is shuffle-free on `g`. */
   private[graft] def maybeBroadcastVocab(vocab: DataFrame, countFrom: DataFrame): DataFrame =
-    maybeBroadcastByCount(vocab, countFrom, "graft.containment.maxBroadcastVocab", 8000000L)
+    maybeBroadcastByCount(vocab, countFrom)
 
   /** How much evidence a stop-gram cap excludes (r16 verdict item 3):
     * grams with df > maxDf carry no containment evidence BY DESIGN, but
@@ -999,45 +998,26 @@ object Dedup {
     * read it after an empty or suspiciously small answer. */
   def lastCapStats: Option[CapStats] = lastCap
 
-  /** Session memo for [[capStats]] — keyed like every other estimator
-    * (structural PlanKey + the cap), so repeated builds (bench min-of-N,
-    * Explain) stay job-free; the memo-job discipline is spec-pinned by
-    * the width-estimate test. */
-  private val capCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(AnyRef, String), CapStats](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(AnyRef, String), CapStats]): Boolean =
-        size() > 64
-    })
-
   /** Compute [[CapStats]] for any per-gram frequency frame — the stored
     * `containmentGramIndex` df frame (price the incremental fold's
     * frozen cap: `capStats(gramDfIdx, "df", maxDf, "nightly")`), or the
     * one-shot family's internal vocabulary. One memoized aggregation
-    * job per (plan, file state, cap) per session (a cache read when the
-    * frame is persisted); None on failure — purely diagnostic, never
-    * load-bearing. */
+    * job per (plan, file state, cap) per session ([[Estimates]]; a
+    * cache read when the frame is persisted); None on failure — purely
+    * diagnostic, never load-bearing. */
   def capStats(gramDf: DataFrame, dfCol: String, maxDf: Int,
                tag: String): Option[CapStats] =
-    try {
-      val sel = gramDf.select(F.col(dfCol).cast("long").as("__dfv"))
-      val (pk, fk) = graft.core.PlanKey.of(sel)
-      val key = (pk, fk + "|cap=" + maxDf)
-      val hit = capCache.get(key)
-      if (hit != null) Some(hit.copy(tag = tag))
-      else {
-        val c = F.col("__dfv")
-        val r = sel.agg(
-          F.count(F.lit(1)),
-          F.sum(F.when(c > maxDf, 1L).otherwise(0L)),
-          F.sum(c),
-          F.sum(F.when(c > maxDf, c).otherwise(0L))).head()
-        def lg(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-        val cs = CapStats(tag, maxDf, lg(0), lg(1), lg(2), lg(3))
-        capCache.put(key, cs)
-        Some(cs)
-      }
-    } catch { case _: Throwable => None }
+    Estimates.of(gramDf.select(F.col(dfCol).cast("long").as("__dfv")),
+        s"capStats|cap=$maxDf") { sel =>
+      val c = F.col("__dfv")
+      val r = sel.agg(
+        F.count(F.lit(1)),
+        F.sum(F.when(c > maxDf, 1L).otherwise(0L)),
+        F.sum(c),
+        F.sum(F.when(c > maxDf, c).otherwise(0L))).head()
+      def lg(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+      CapStats(tag, maxDf, lg(0), lg(1), lg(2), lg(3))
+    }.map(_.copy(tag = tag))
 
   /** The capped-df vocabulary view both estimators below are keyed on —
     * ONE builder, because the memo keys must stay plan-identical. */
@@ -1053,12 +1033,10 @@ object Dedup {
     * plan — the estimate is never load-bearing for correctness). */
   private[graft] def cappedPairMass(gramDf: DataFrame, dfCol: String,
                                     maxDf: Int): Double = {
-    val capped = cappedDfView(gramDf, dfCol, maxDf)
-    try Similarity.memoizedScalar(capped) { g =>
+    Estimates.of(cappedDfView(gramDf, dfCol, maxDf), "pairMass") { g =>
       Option(g.agg(F.sum(F.col("__dfv") * (F.col("__dfv") - F.lit(1L)))).head.get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
-    }.toDouble
-    catch { case _: Throwable => -1.0 }
+    }.fold(-1.0)(_.toDouble)
   }
 
   /** The largest df cap whose EXACT cumulative pair mass
@@ -1084,11 +1062,10 @@ object Dedup {
     if (est < 0 || est <= budget.toDouble) (maxDf, est)
     else {
       val cap =
-        // the budget literal rides the plan so the memo key differs per
-        // budget — two calls at different budgets must not share a cap
-        try Similarity.memoizedScalar(capped.select(F.col("__dfv").as("__dfh"),
-            F.lit(budget).as("__budget"))) { g =>
-          val hist = g.groupBy("__dfh").agg(F.count(F.lit(1)).as("__k"))
+        // the budget is in the salt: two calls at different budgets
+        // must not share a cap
+        Estimates.of(capped, s"budgetCap|budget=$budget") { g =>
+          val hist = g.groupBy("__dfv").agg(F.count(F.lit(1)).as("__k"))
             .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
           var cum = 0L; var cap = 1L; var open = true
           hist.foreach { case (dfv, cnt) =>
@@ -1097,8 +1074,7 @@ object Dedup {
             else open = false
           }
           cap
-        }
-        catch { case _: Throwable => maxDf.toLong }
+        }.getOrElse(maxDf.toLong)
       (math.min(cap, maxDf.toLong).toInt, est)
     }
   }

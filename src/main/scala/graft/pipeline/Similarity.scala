@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Estimates
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
   *
@@ -17,69 +19,6 @@ import org.apache.spark.sql.{functions => F}
   * seeded hash (deterministic, no stored model).
   */
 object Similarity {
-
-  /** Memoized corpus row counts — see `cosinePairsViaCells`: auto-nlist
-    * needs the size, and plan inspection must not re-pay a count job per
-    * build. ADVICE r7 hardening: (a) the key folds in the size +
-    * modification time of every file the plan reads, so a parquet path
-    * that GREW between ingests of a long incremental session gets a
-    * fresh count instead of a stale (too-small) auto-nlist; (b) the map
-    * is bounded — a session that builds queries over many distinct
-    * corpora evicts oldest-inserted entries instead of growing without
-    * limit. (Access-order true LRU isn't worth a lock here: the cache
-    * exists to dedupe REPEATED builds of the same query, which insertion
-    * order serves equally.) */
-  private val CountCacheMax = 256
-  private val countCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, AnyRef, String), Long](64, 0.75f, false) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, AnyRef, String), Long]): Boolean =
-          size() > CountCacheMax
-      })
-
-  /** Cache key for a corpus plan: canonicalized logical plan + the
-    * (path, size, mtime) of every file it scans. Two plans over the
-    * same path diverge the moment the underlying data changes.
-    *
-    * File identities come from the ANALYZED plan, not the optimized
-    * one: optimization substitutes `InMemoryRelation` for persisted
-    * subtrees, which hides the underlying `LogicalRelation` — with it,
-    * two same-shaped plans over DIFFERENT corpora collided to one memo
-    * key once the r10 cache registry started persisting the gram-df
-    * frames. That stale-estimate collision is what un-bounded the r11
-    * 100× containment probes (the 100× leg was served the 1× pair-mass
-    * estimate, ≤ budget, so the cap never engaged and the pair join
-    * exploded to ~10^10 rows); PipelineSpec pins key distinctness
-    * under persist. */
-  private[graft] def corpusKey(df: DataFrame): (AnyRef, String) =
-    graft.core.PlanKey.of(df) // r16: structural key, shared helper —
-    // the rendered-string key collided for same-schema in-memory frames
-    // (LocalRelation/LogicalRDD print only their schema), which could
-    // serve one corpus's memoized estimate to another
-
-  /** Memoized `df.count()` keyed by `corpusKey` — one count job per
-    * distinct (plan, file-state) per session. No lock held across the
-    * count job: a racing duplicate count is harmless, a blocked
-    * construction thread is not. Shared with `Dedup` for band-fanout
-    * width sizing. */
-  /** Memoized scalar action keyed like [[memoizedCount]] — the
-    * generalization for width-sizing aggregates (Σ df·(df−1) etc.):
-    * one job per (plan, file-state) per session, so repeated builds of
-    * the same query never re-pay the estimate. */
-  private[graft] def memoizedScalar(df: DataFrame)(action: DataFrame => Long): Long = {
-    val (p, f) = corpusKey(df)
-    val k = ("scalar", p, f)
-    if (countCache.containsKey(k)) countCache.get(k)
-    else { val v = action(df); countCache.put(k, v); v }
-  }
-
-  private[pipeline] def memoizedCount(df: DataFrame): Long = {
-    val (p, f) = corpusKey(df)
-    val k = ("count", p, f)
-    if (countCache.containsKey(k)) countCache.get(k)
-    else { val v = df.count(); countCache.put(k, v); v }
-  }
 
   /** dot(a, b) over float arrays, accumulated in double — zip_with +
     * aggregate form (reference implementation; higher-order functions
@@ -205,13 +144,12 @@ object Similarity {
     // size the query set ONCE and thread it into ivfTopK — the two
     // layers previously counted under different memo keys (queries vs
     // q0 projections), scanning a crawl-sized query set twice cold
-    val nq = try memoizedCount(queries.select(F.col(idCol))) catch { case _: Throwable => -1L }
+    val nq = Estimates.count(queries.select(F.col(idCol))).getOrElse(-1L)
     val nn = ivfTopK(corpus, queries, k, nlist, nprobe, iters, idCol, vecCol, queryCount = nq)
       .select(F.col("query_id"), F.col("neighbor_id"))
-    val maxRows =
-      try corpus.sparkSession.conf.get("graft.knn.maxBroadcastSurvivors", "8000000").toLong
-      catch { case _: Throwable => 8000000L }
-    val hinted = if (nq >= 0 && nq * k.toLong <= maxRows) F.broadcast(nn) else nn
+    val hinted =
+      if (nq >= 0 && nq * k.toLong <= maxBroadcastSurvivors(corpus.sparkSession)) F.broadcast(nn)
+      else nn
     val votes = corpus
       .select(F.col(idCol).as("neighbor_id"), F.col(labelCol).as("__lbl"))
       .join(hinted, "neighbor_id")
@@ -322,7 +260,7 @@ object Similarity {
                                     cos: (Column, Column) => Column): DataFrame = {
     var centroids = c.orderBy("cid0").limit(nlist)
       .select(F.row_number().over(Window.orderBy("cid0")).as("cell"), F.col("cv").as("centroid"))
-    for (_ <- 0 until iters) {
+    for (round <- 0 until iters) {
       // FUSED re-average (r22, r21 verdict item 3): ONE groupBy(cell)
       // collecting the cell's vectors, then every dim's mean computed
       // in the same projection — where the r13–r21 shape posexploded to
@@ -330,13 +268,15 @@ object Similarity {
       // the re-assemble groupBy(cell)). Halves the training stage
       // count; the collected state per group is ~trainCap/nlist ≈ 8
       // vectors — bounded by the training cap at any corpus size.
-      // persist(), NOT localCheckpoint: checkpoint — even lazy — runs
-      // every AQE shuffle stage at CALL time, so query construction
+      // a tracked persist, NOT localCheckpoint: checkpoint — even lazy —
+      // runs every AQE shuffle stage at CALL time, so query construction
       // (explain, the cartesian plan guard, registry sweeps) paid
       // Lloyd-round jobs per build. persist is plan-time free and
       // still compute-once at first action (each round's frame is
       // nlist rows, so the cache is trivial); `iters` is small and
-      // fixed, so the un-truncated lineage stays bounded.
+      // fixed, so the un-truncated lineage stays bounded. Tracking
+      // lets `CacheRegistry.releaseAll` free the rounds, and a rebuild
+      // over the same corpus gets the round already cached.
       // The re-average is DETERMINISTIC under recomputation (ADVICE r12)
       // and BIT-IDENTICAL to the two-step form (the sorted-sum
       // re-average contract): per (cell, dim) the same multiset of
@@ -346,18 +286,18 @@ object Similarity {
       // real corpus; the q55/q56/q58 oracles hash-pin the rest.
       // Precondition (the corpus contract): fixed-width vectors with no
       // null elements — the same shape every cosine below assumes.
-      centroids = nearestCellsCarry(c, centroids, "cid0", "cv", 1, cos)
-        .groupBy("cell")
-        .agg(F.collect_list(F.col("cv")).as("__vs"))
-        .select(F.col("cell"),
-          F.transform(
-            F.sequence(F.lit(0), F.size(F.element_at(F.col("__vs"), 1)) - 1),
-            d => (F.aggregate(
-                    F.array_sort(F.transform(F.col("__vs"),
-                      v => F.element_at(v, d + 1).cast("double"))),
-                    F.lit(0.0), (acc, y) => acc + y)
-                  / F.size(F.col("__vs"))).cast("float")).as("centroid"))
-        .persist()
+      centroids = graft.core.CacheRegistry.track(s"trainCentroids.round$round",
+        nearestCellsCarry(c, centroids, "cid0", "cv", 1, cos)
+          .groupBy("cell")
+          .agg(F.collect_list(F.col("cv")).as("__vs"))
+          .select(F.col("cell"),
+            F.transform(
+              F.sequence(F.lit(0), F.size(F.element_at(F.col("__vs"), 1)) - 1),
+              d => (F.aggregate(
+                      F.array_sort(F.transform(F.col("__vs"),
+                        v => F.element_at(v, d + 1).cast("double"))),
+                      F.lit(0.0), (acc, y) => acc + y)
+                    / F.size(F.col("__vs"))).cast("float")).as("centroid")))
     }
     centroids
   }
@@ -391,8 +331,7 @@ object Similarity {
     // session pays ONE sizing scan, not one per layer (ADVICE r12)
     val nq =
       if (queryCount >= 0) queryCount
-      else try memoizedCount(q0.select(F.col("query_id")))
-      catch { case _: Throwable => -1L }
+      else Estimates.count(q0.select(F.col("query_id"))).getOrElse(-1L)
     val probesHinted =
       if (nq >= 0 && broadcastableVecs(q0, "qv", nq * nprobe)) F.broadcast(probes)
       else probes
@@ -457,7 +396,7 @@ object Similarity {
     val total: Long =
       if (nlist > 0) -1L
       else if (rowCount >= 0) rowCount
-      else memoizedCount(c)
+      else Estimates.count(c).get
     val n = if (nlist > 0) nlist
       else math.max(16, math.ceil(mprobe * math.sqrt(total.toDouble)).toInt)
     // Lloyd rounds only need REPRESENTATIVE centroids, not every row:
@@ -682,7 +621,7 @@ object Similarity {
     val total: Long =
       if (rowCount >= 0) rowCount
       else if (nlist > 0) -1L // explicit nlist: plan construction stays job-free
-      else memoizedCount(c)
+      else Estimates.count(c).get
     // same m·√n sizing rule as the empirical path (m = 8 default probe
     // breadth there; here the probe set is radius-driven, but cell
     // granularity still wants to grow with the corpus)
@@ -709,10 +648,10 @@ object Similarity {
     // never n^1.5 state. Unknown size (explicit nlist, no rowCount)
     // keeps the cache: the bounded spec/ad-hoc path.
     val assignedRaw = assignCellsWithSim(c, centroids, "cid0", "cv", cos)
-    val asgEstBytes = if (total >= 0) total * 64L else -1L
     val assigned =
-      if (asgEstBytes >= 0 && asgEstBytes > simsCacheMaxBytes(corpus.sparkSession)) assignedRaw
-      else graft.core.CacheRegistry.track("cosinePairsComplete.assigned", assignedRaw)
+      if (cachesAssigned(corpus.sparkSession, total))
+        graft.core.CacheRegistry.track("cosinePairsComplete.assigned", assignedRaw)
+      else assignedRaw
     // α as a broadcast scalar: cosα = min assignment sim (clamped to
     // [-1,1]); probe cutoff = cos(acos(τ)+α) = τ·cosα − sinτ̄·sinα
     val alphaRow = assigned.agg(
@@ -778,6 +717,20 @@ object Similarity {
       (8L * 1024 * 1024 * 1024).toString).toLong
     catch { case _: Throwable => 8L * 1024 * 1024 * 1024 }
 
+  /** Whether [[cosinePairsComplete]] caches its assignment frame of
+    * `total` rows: an unknown size (`total < 0`) or `total` × 64 B within
+    * [[simsCacheMaxBytes]]. */
+  private[graft] def cachesAssigned(spark: org.apache.spark.sql.SparkSession, total: Long): Boolean =
+    total < 0 || total * 64L <= simsCacheMaxBytes(spark)
+
+  /** Row bound for [[knnClassifyIvf]]'s broadcast-hinted label attach:
+    * the queries×k survivor frame is hinted while it has at most this
+    * many rows, default 8M (two ids a row, ~128-256 MB). Override per
+    * session via `graft.knn.maxBroadcastSurvivors`. */
+  def maxBroadcastSurvivors(spark: org.apache.spark.sql.SparkSession): Long =
+    try spark.conf.get("graft.knn.maxBroadcastSurvivors", "8000000").toLong
+    catch { case _: Throwable => 8000000L }
+
   /** Byte budget for broadcasting the verify join's (id → vector)
     * payload (r10 verdict task 1 — the bound is BYTES-adaptive, not a
     * fixed row count): default 128 MiB, the measured-safe point at the
@@ -802,18 +755,16 @@ object Similarity {
     * An unreadable/empty corpus falls back to a 64-float estimate —
     * the branch choice only ever affects PERFORMANCE; both branches
     * compute the identical pair set. */
-  private[pipeline] def broadcastableVecs(corpus: DataFrame, vecCol: String,
+  private[graft] def broadcastableVecs(corpus: DataFrame, vecCol: String,
                                           total: Long): Boolean = {
     def rowBytes(dim: Long) = dim * 4L + 24L // float payload + overhead
     val budget = broadcastVecMaxBytes(corpus.sparkSession)
     if (total * rowBytes(4096L) <= budget) true
     else if (total * rowBytes(8L) > budget) false
     else {
-      val dim: Long =
-        try memoizedScalar(corpus.select(F.col(vecCol))) { d =>
-          d.select(F.size(F.col(vecCol)).cast("long")).limit(1).head().getLong(0)
-        }
-        catch { case _: Throwable => 64L }
+      val dim = Estimates.of(corpus.select(F.col(vecCol)), "vecDim") {
+        _.select(F.size(F.col(vecCol)).cast("long")).limit(1).head().getLong(0)
+      }.getOrElse(64L)
       total * rowBytes(dim) <= budget
     }
   }

@@ -172,8 +172,7 @@ object TextOps {
                       groupCol: String, pct: Double,
                       approxAbove: Long = 50000000L,
                       accuracy: Int = 10000): DataFrame = {
-    val n = try Similarity.memoizedCount(docs.select(F.col(idCol)))
-      catch { case _: Throwable => -1L }
+    val n = graft.core.Estimates.count(docs.select(F.col(idCol))).getOrElse(-1L)
     if (n > approxAbove)
       qualityGateApprox(docs, idCol, textCol, groupCol, pct, accuracy)
     else qualityGate(docs, idCol, textCol, groupCol, pct)

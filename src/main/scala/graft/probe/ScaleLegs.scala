@@ -110,7 +110,7 @@ object ScaleLegs {
       val corpus = e.withColumn("label", (F.col("vec_id") % 8).cast("int"))
       val queries = e.select((F.col("vec_id") + 1000000L).as("vec_id"), F.col("embedding"))
       // a sizing count at construction is part of this probe's measured
-      // work; registered queries size via Similarity.memoizedCount
+      // work; registered queries size via Estimates.count
       Similarity.knnClassifyIvf(corpus, queries, k = 5, nlist = nlist(corpus.count()), nprobe = 4)
     }))
 
@@ -187,26 +187,24 @@ object ScaleLegs {
 
   /** q55/q58's complete cosine-pairs path (τ = 0.4, the registered
     * completeness regime) and the IVF classification at ×100 / ×1000 of
-    * the embeddings. Each timing names the budget branch that runs: the
-    * assigned-frame cache (`graft.simsCacheMaxBytes`), broadcast vs
-    * shuffled verify/probes (`graft.broadcastVecMaxBytes`) and the
-    * hinted label attach (`graft.knn.maxBroadcastSurvivors`). `x55stats`
+    * the embeddings. Each timing names the budget branch that runs, as
+    * the library's own gates decide it: the assigned-frame cache
+    * (`Similarity.cachesAssigned`), broadcast vs shuffled verify and
+    * probes (`Similarity.broadcastableVecs`) and the hinted label attach
+    * (`Similarity.maxBroadcastSurvivors`). `x55stats`
     * prices the candidate fan-out without materializing a pair. */
   def vecs(spark: SparkSession, a: Args): Unit = {
     val base = Tables.embeddings(spark, a.sf)
     val dim = base.select(F.size(F.col("embedding"))).head().getInt(0)
     val tau = 0.4
-    def gates(n: Long): String = {
-      def conf(k: String, default: Long) = spark.conf.get(k, default.toString).toLong
-      val asg = n * 64L
-      val vecBytes = n * (dim * 4L + 64L)
-      s"nlist=${nlist(n)} assigned=${asg >> 20}MiB(" +
-        (if (asg > conf("graft.simsCacheMaxBytes", 8L << 30)) "SKIP cache" else "cache") +
-        s") vecs=${vecBytes >> 20}MiB(" +
-        (if (vecBytes > conf("graft.broadcastVecMaxBytes", 512L << 20)) "SHUFFLED verify/probes"
-         else "broadcast") + s") survivors(k=5)=${5 * n}(" +
-        (if (5 * n > conf("graft.knn.maxBroadcastSurvivors", 8000000L)) "no hint" else "hinted") + ")"
-    }
+    def gates(corpus: DataFrame, n: Long): String =
+      s"nlist=${nlist(n)} assigned(" +
+        (if (Similarity.cachesAssigned(spark, n)) "cache" else "SKIP cache") + ") verify(" +
+        (if (Similarity.broadcastableVecs(corpus, "embedding", n)) "broadcast" else "SHUFFLED") +
+        ") probes(" +
+        (if (Similarity.broadcastableVecs(corpus, "embedding", 4 * n)) "broadcast" else "SHUFFLED") +
+        s") survivors(k=5)=${5 * n}(" +
+        (if (5 * n > Similarity.maxBroadcastSurvivors(spark)) "no hint" else "hinted") + ")"
     for (factor <- a.factor.fold(Seq(100, 1000))(Seq(_))) {
       val path = copies(base, "vec_id", 2000L, factor, s"$Scratch/emb_${factor}x.parquet")
       def d = spark.read.parquet(path)
@@ -218,11 +216,11 @@ object ScaleLegs {
           s"candidate_pairs=${st.getLong(2)} cos_alpha=${st.getDouble(3)}")
         spark.catalog.clearCache()
       }
-      if (a.wants("q55")) timed(spark, s"q55_complete_${factor}x", gates(n))(
+      if (a.wants("q55")) timed(spark, s"q55_complete_${factor}x", gates(d, n))(
         Similarity.cosinePairsComplete(d, tau).select("id_a", "id_b"))
-      if (a.wants("q58")) timed(spark, s"q58_clusters_${factor}x", gates(n))(
+      if (a.wants("q58")) timed(spark, s"q58_clusters_${factor}x", gates(d, n))(
         D.connectedComponents(Similarity.cosinePairsComplete(d, tau)).select("id", "cluster"))
-      if (a.wants("x99")) timed(spark, s"x99_knn_ivf_${factor}x", gates(n)) {
+      if (a.wants("x99")) timed(spark, s"x99_knn_ivf_${factor}x", gates(d, n)) {
         val corpus = d.withColumn("label", (F.col("vec_id") % 8).cast("int"))
         // query ids shift past every grown corpus id
         val queries = d.select((F.col("vec_id") + 10000000L).as("vec_id"), F.col("embedding"))

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.{Estimates, PlanKey}
 import graft.pipeline._
 
 /** Ground-truth tests for the LSH/ANN operators the driver checks only
@@ -268,47 +269,25 @@ class PipelineSpec extends AnyFunSuite {
 
   test("cosinePairsViaCells plan construction launches zero Spark jobs when hinted") {
     // query CONSTRUCTION (explain, the cartesian plan guard) must be
-    // action-free: lazy Lloyd-round checkpoints + rowCount hint
+    // action-free: lazy Lloyd-round caches + rowCount hint
     val vecs = (0L until 64L).map(i =>
       (i, Array.tabulate(8)(d => (i % 7 + d).toFloat))).toDF("vec_id", "embedding")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        descs.add(js.stageInfos.map(_.name).mkString("|"))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (df, jobs) = TestSpark.built {
       val df = Similarity.cosinePairsViaCells(vecs, 0.5, rowCount = 64L)
       df.queryExecution.executedPlan.toString // force planning, not execution
-      Thread.sleep(500) // listener bus is async; let any job-start event land
-      assert(jobs.get() == 0,
-        s"plan construction ran ${jobs.get()} Spark jobs: ${descs.toArray.mkString("; ")}")
-      assert(df.count() > 0) // and the hinted plan still executes
-    } finally spark.sparkContext.removeSparkListener(listener)
+      df
+    }
+    assert(jobs == 0, s"plan construction ran $jobs Spark jobs")
+    assert(df.count() > 0) // and the hinted plan still executes
   }
 
   test("containmentPairs width estimate is memoized: rebuild launches no new job") {
     // prime the memo — the FIRST build pays one estimate job by design
     // (documented in the scaladoc); every rebuild must be job-free
     Dedup.containmentPairs(docs, "doc_id", "text", k = 2)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Thread.sleep(300) // drain any in-flight event from the priming build
-      val before = jobs.get()
-      Dedup.containmentPairs(docs, "doc_id", "text", k = 2) // same (plan, file-state)
-      Thread.sleep(500) // listener bus is async
-      assert(jobs.get() == before,
-        s"rebuild ran ${jobs.get() - before} estimate job(s); the memo must serve it")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // same (plan, file-state)
+    val (_, jobs) = TestSpark.built(Dedup.containmentPairs(docs, "doc_id", "text", k = 2))
+    assert(jobs == 0, s"rebuild ran $jobs estimate job(s); the memo must serve it")
   }
 
   test("exact-verify branch selection is bytes-adaptive, both branches agree") {
@@ -734,15 +713,18 @@ class PipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-countkey").toString
     val p = s"$dir/corpus.parquet"
     (0 until 10).map(_.toLong).toDF("vec_id").write.mode("overwrite").parquet(p)
-    val k1 = Similarity.corpusKey(spark.read.parquet(p))
+    val c1 = spark.read.parquet(p)
+    assert(Estimates.count(c1).get == 10L)
     // same path, same plan shape — but the corpus GREW between ingests:
-    // the key must change so a memoized count can't serve a stale size
+    // the key must change so the memoized count can't serve a stale size
     (0 until 200).map(_.toLong).toDF("vec_id").write.mode("overwrite").parquet(p)
-    val k2 = Similarity.corpusKey(spark.read.parquet(p))
-    assert(k1 != k2)
-    // stable across re-reads of unchanged data
-    val k3 = Similarity.corpusKey(spark.read.parquet(p))
-    assert(k2 == k3)
+    val c2 = spark.read.parquet(p)
+    assert(PlanKey.of(c1) != PlanKey.of(c2))
+    assert(Estimates.count(c2).get == 200L)
+    // stable across re-reads of unchanged data: the memo serves the count
+    val c3 = spark.read.parquet(p)
+    assert(PlanKey.of(c2) == PlanKey.of(c3))
+    assert(TestSpark.built(Estimates.count(c3).get) == ((200L, 0)))
   }
 
   test("cosinePairsComplete equals the all-pairs anchor at a low threshold") {
@@ -1082,11 +1064,11 @@ class PipelineSpec extends AnyFunSuite {
     val fa = agg(s"$dir/a.parquet"); val fb = agg(s"$dir/b.parquet")
     try {
       fa.count(); fb.count() // materialize both caches
-      assert(Similarity.corpusKey(fa) != Similarity.corpusKey(fb))
-      // and the memoized scalar serves per-corpus values, not the
+      assert(PlanKey.of(fa) != PlanKey.of(fb))
+      // and the memoized estimate serves per-corpus values, not the
       // first corpus's answer
-      val ca = Similarity.memoizedScalar(fa)(_.count())
-      val cb = Similarity.memoizedScalar(fb)(_.count())
+      val ca = Estimates.count(fa).get
+      val cb = Estimates.count(fb).get
       assert(ca == 10L && cb == 500L, s"memo served stale values: $ca, $cb")
     } finally { fa.unpersist(); fb.unpersist() }
   }

@@ -153,20 +153,20 @@ class PrefixSpec extends AnyFunSuite {
     assert(a1.records().tail.map(_.head) ==
       Seq("4", "6", "2", "5", "1", "3"), "order preserved after key drop")
     // a second anchor of the same frame is a memo HIT: no second scan
-    val h0 = Prefix.BoundsCache.hits
+    val h0 = Estimates.hits
     val a2 = f.dropCols("i")
-    assert(Prefix.BoundsCache.hits > h0,
+    assert(Estimates.hits > h0,
       "re-anchoring the same frame must hit the bounds memo")
     assert(a2.records() == a1.records())
     // a SAME-SCHEMA frame with different data must MISS (the key is the
     // structural plan — a rendered string prints only the schema for
     // in-memory leaves and would serve frame f's bounds to frame g,
     // silently collapsing g's chunk balance)
-    val h1 = Prefix.BoundsCache.hits
+    val h1 = Estimates.hits
     val g = multi(Seq((100, 1L), (900, 2L), (500, 3L))
       .map { case (k, v) => RowIV(k, v) }, 3).sort(Sorter("i"))
     val ga = g.dropCols("i")
-    assert(Prefix.BoundsCache.hits == h1,
+    assert(Estimates.hits == h1,
       "different data under the same schema must not hit the memo")
     assert(ga.records().tail.map(_.head) == Seq("1", "3", "2"))
   }

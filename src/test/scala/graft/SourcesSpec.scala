@@ -7,12 +7,14 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark.built
+import graft.core.{Estimates, SessionMemo}
 import graft.io.{Sources, TadaIO}
 
 /** `Sources.read`: a repeat read of unchanged files reuses the inferred
   * schema and starts no Spark job at build; any change to the files, the
   * options or the session conf re-infers; what it cannot fingerprint
-  * reads uncached. */
+  * reads uncached. The build-time `Estimates` share its file stamp and
+  * its container, so (g)-(i) pin them here too. */
 class SourcesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -139,5 +141,59 @@ class SourcesSpec extends AnyFunSuite {
     assert(built(Sources.read(spark, "csv", paths.last, opts))._2 == 0)
     assert(built(Sources.read(spark, "csv", paths.head, opts))._2 > 0)
     assert(Sources.memoSize(spark) == Sources.MaxSchemas)
+  }
+
+  test("(g) a count estimate over a rename-replaced CSV of the same length and mtime recounts") {
+    val f = dir().resolve("n.csv")
+    Files.writeString(f, "a\n1\n2\n")
+    val header = Map("header" -> "true")
+    def count() = Estimates.count(Sources.read(spark, "csv", f.toString, header)).get
+    assert(count() == 2L)
+    assert(built(count())._2 == 0)
+    // one row fewer, same length and mtime: only the inode moves
+    val mtime = Files.getLastModifiedTime(f)
+    val tmp = f.resolveSibling("n.tmp")
+    Files.writeString(tmp, "a\n123\n")
+    Files.setLastModifiedTime(tmp, mtime)
+    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING)
+    assert(Files.getLastModifiedTime(f) == mtime && Files.size(f) == 6)
+    assert(count() == 1L)
+  }
+
+  test("(h) estimators with different salts over one plan each run their own job") {
+    import org.apache.spark.sql.{functions => F}
+    val df = spark.range(50).toDF("x")
+    def est(salt: String, agg: org.apache.spark.sql.Column) =
+      built(Estimates.of(df, salt)(_.agg(agg).head().getLong(0)))
+    val (lo, j1) = est("h.min", F.min("x"))
+    val (hi, j2) = est("h.max", F.max("x"))
+    assert(lo.contains(0L) && hi.contains(49L) && j1 > 0 && j2 > 0)
+    assert(est("h.min", F.min("x")) == ((Some(0L), 0)))
+    // a failed job is None and is not memoized: the next call runs again
+    assert(Estimates.of(df, "h.fail")(_ => throw new IllegalStateException("no")).isEmpty)
+    assert(Estimates.of(df, "h.fail")(_ => 7L).contains(7L))
+    // a count that fails hands its exception to the caller
+    val bad = spark.range(1).toDF("x").filter("assert_true(x < 0) IS NULL")
+    assert(Estimates.count(bad).isFailure)
+  }
+
+  test("(i) the shared container stays at its bound per session") {
+    val memo = new SessionMemo[Int, Int](3)
+    val other = spark.newSession()
+    (1 to 5).foreach(i => memo.put(spark, i, i))
+    memo.put(other, 1, 1)
+    assert(memo.size(spark) == 3 && memo.size(other) == 1)
+    // least recently used goes first
+    assert(memo.get(spark, 1).isEmpty && memo.get(spark, 3).contains(3))
+    memo.put(spark, 6, 6)
+    assert(memo.get(spark, 3).isDefined && memo.get(spark, 4).isEmpty)
+    // Estimates over a session of its own: at most MaxEntries, others untouched
+    val mine = Estimates.size(spark.range(1).toDF())
+    val df = other.range(3).toDF()
+    (0 to Estimates.MaxEntries).foreach(i => Estimates.of(df, s"i.$i")(_ => i))
+    assert(Estimates.size(df) == Estimates.MaxEntries)
+    assert(Estimates.size(spark.range(1).toDF()) == mine)
+    var ran = false
+    assert(Estimates.of(df, "i.0") { _ => ran = true; 0 }.contains(0) && ran)
   }
 }
