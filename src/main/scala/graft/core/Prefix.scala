@@ -711,8 +711,7 @@ object Prefix {
     * sequential window form is the honest plan (a 100k-row rolling
     * window is inherently order-serial work per row anyway). */
   private def maxRollingN(f: TadaFrame): Int =
-    try f.df.sparkSession.conf.get("graft.prefix.maxRollingN").toInt
-    catch { case _: Throwable => 1024 }
+    Knobs.int(f.df.sparkSession, "graft.prefix.maxRollingN", 1024)
 
   /** The chunked rollingN rebuilds each chunk's ≤ n−1 tail windows by
     * re-aggregating exploded, UNORDERED rows — exact only for

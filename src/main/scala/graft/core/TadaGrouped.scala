@@ -155,8 +155,8 @@ final case class TadaGrouped(frame: TadaFrame, keys: Seq[String], aligned: Boole
   }
 
   private def rankRepMaxWindowGroups: Double =
-    try df.sparkSession.conf.get("graft.rankRep.maxWindowGroups").toDouble
-    catch { case _: Throwable => TadaGrouped.RankRepMaxWindowGroups }
+    Knobs.double(df.sparkSession, "graft.rankRep.maxWindowGroups",
+      TadaGrouped.RankRepMaxWindowGroups)
 
   /** Positional pick per group in frame order: First/Last/Nth with
     * negative-from-end and OOB⇒null (groupers.go:188-200, 824-868).

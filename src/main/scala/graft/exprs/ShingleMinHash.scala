@@ -15,8 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * UDF serialization boundary per row); as native expressions the scan
   * stays inside whole-stage codegen end to end. Semantics are identical
   * to the UDF kernels they replace (graft.pipeline.Dedup), which remain
-  * as the sessionless fallbacks the ScalaTest ground truths compare
-  * against.
+  * as the references the ScalaTest ground truths compare against.
   */
 
 /** Word w-shingles (order-preserving distinct) of a token array.

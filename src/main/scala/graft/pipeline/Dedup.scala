@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{BinaryType, DataType, StructType}
 import org.apache.spark.sql.{functions => F}
 
-import graft.core.Estimates
+import graft.core.{Estimates, Knobs}
 
 /** Deduplication operators for training-data pipelines, all shaped for
   * 100 TB:
@@ -27,7 +27,8 @@ import graft.core.Estimates
   * MinHashBands, SimHash64 in `graft.exprs`); a handful of documented
   * JVM-kernel UDFs remain where an interpreted higher-order expression
   * would re-evaluate its captured subtree per element (each justified at
-  * its definition site below) or as sessionless fallbacks.
+  * its definition site below) or as the reference kernels the native
+  * expressions are tested against.
   */
 object Dedup {
 
@@ -48,9 +49,9 @@ object Dedup {
   }
 
   /** Production path: the native `Shingles` expression (codegen — the
-    * whole LSH scan projection stays compiled). The UDF kernel above
-    * remains as `shinglesUdf`, the sessionless fallback the ScalaTest
-    * ground truths cross-check. */
+    * whole LSH scan projection stays compiled). Nothing falls back to the
+    * UDF kernel above: it remains as `shinglesUdf`, the reference the
+    * native expression is tested against. */
   def shingles(text: Column, w: Int = 3): Column = {
     graft.exprs.GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
     F.call_function("shingle_w", TextOps.tokens(text), F.lit(w))
@@ -59,38 +60,13 @@ object Dedup {
   def shinglesUdf(text: Column, w: Int = 3): Column =
     shingleKernel(TextOps.tokens(text), F.lit(w))
 
-  /** k seeded 64-bit minhashes of a shingle array, as one compiled JVM
-    * kernel call per row (like the SimHash kernel: k×|shingles| hash
-    * evaluations are two orders faster compiled than as k interpreted
-    * higher-order transforms). One hash per shingle, then k cheap
-    * seed-mix permutations of it — the standard one-hash MinHash family. */
-  private def minhashKernel(k: Int) = F.udf { shingles0: Seq[String] =>
-    val shingles = if (shingles0 == null) Seq.empty[String] else shingles0
-    val sig = Array.fill(k)(Long.MaxValue)
-    shingles.foreach { s =>
-      val h0 = scala.util.hashing.MurmurHash3.stringHash(s).toLong
-      var i = 0
-      while (i < k) {
-        // Murmur-style 64-bit finalizer over (h0, seed i)
-        var h = h0 ^ (i.toLong * 0x9E3779B97F4A7C15L)
-        h ^= h >>> 33; h *= 0xFF51AFD7ED558CCDL
-        h ^= h >>> 33; h *= 0xC4CEB9FE1A85EC53L
-        h ^= h >>> 33
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-    }
-    sig.toSeq
-  }
-
-  def minhashSignature(shingleCol: Column, k: Int = 32): Column =
-    minhashKernel(k)(shingleCol)
-
-  /** Fused kernel: k minhashes AND the b band-bucket hashes in ONE call
-    * per row. Keeping banding inside the kernel matters: a UDF column
-    * disables whole-stage codegen for its projection, so slicing the
-    * signature column 8 ways would re-inline (and re-run, interpreted)
-    * the whole signature computation once per band. */
+  /** Fused kernel: k seeded 64-bit minhashes (one hash per shingle,
+    * then k cheap seed-mix permutations of it — the standard one-hash
+    * MinHash family) AND the b band-bucket hashes in ONE call per row.
+    * Keeping banding inside the kernel matters: a UDF column disables
+    * whole-stage codegen for its projection, so slicing the signature
+    * column 8 ways would re-inline (and re-run, interpreted) the whole
+    * signature computation once per band. */
   private def minhashBandKernel(k: Int, bands: Int) = {
     val rowsPer = k / bands
     F.udf { shingles0: Seq[String] =>
@@ -126,19 +102,11 @@ object Dedup {
       (bucket, idx) => F.struct(idx.as("band"), bucket.as("bucket")))
   }
 
-  /** UDF form of the fused minhash+banding kernel (sessionless fallback). */
+  /** UDF form of the fused minhash+banding kernel — the reference
+    * `bandKeysDirect` is tested against; nothing falls back to it. */
   def bandKeysDirectUdf(shingleCol: Column, k: Int = 32, bands: Int = 8): Column =
     F.transform(minhashBandKernel(k, bands)(shingleCol),
       (bucket, idx) => F.struct(idx.as("band"), bucket.as("bucket")))
-
-  /** LSH band keys: the signature split into `bands` slices of `rowsPer`
-    * hashes, each slice hashed to one bucket key. Docs sharing ANY band
-    * key are candidates. */
-  def bandKeys(sig: Column, bands: Int, rowsPer: Int): Column =
-    F.array((0 until bands).map { b =>
-      F.struct(F.lit(b).as("band"),
-        F.xxhash64(F.concat_ws(",", F.slice(sig, b * rowsPer + 1, rowsPer))).as("bucket"))
-    }: _*)
 
   /** Candidate pairs from LSH buckets (id_a < id_b). `maxBucket` caps
     * pathological buckets (boilerplate spam) — at scale an unbounded
@@ -211,21 +179,13 @@ object Dedup {
   }
   /** Production path: native `JaccardSim` expression (codegen; one
     * hash-set build per pair, no UDF boundary). `jaccardUdf` is the
-    * sessionless fallback kernel. */
+    * reference kernel it is tested against; nothing falls back to it. */
   def jaccard(a: Column, b: Column): Column = {
     graft.exprs.GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
     F.call_function("jaccard_sim", a, b)
   }
 
   def jaccardUdf(a: Column, b: Column): Column = jaccardKernel(a, b)
-
-  /** Codegen form: right choice when the surrounding projection has no
-    * UDF (whole-stage codegen keeps array_intersect/union compiled). */
-  def jaccardNative(a: Column, b: Column): Column = {
-    val inter = F.size(F.array_intersect(a, b)).cast("double")
-    val union = F.size(F.array_union(a, b)).cast("double")
-    F.when(union === 0, 0.0).otherwise(inter / union)
-  }
 
   /** Keeper selection — the final stage of every dedup pipeline: given
     * transitive cluster labels (`connectedComponents` /
@@ -311,10 +271,7 @@ object Dedup {
     * job at plan-construction time (the job-free-construction contract
     * PipelineSpec pins elsewhere). */
   private def assertChunkIndexDistinct(index: DataFrame, op: String): Unit = {
-    val dbg =
-      try index.sparkSession.conf.get("graft.debug.assertDistinctIndex", "false").toBoolean
-      catch { case _: Throwable => false }
-    if (dbg) {
+    if (Knobs.boolean(index.sparkSession, "graft.debug.assertDistinctIndex", false)) {
       val Array(n, nd) = index
         .agg(F.count(F.lit(1)),
           F.count_distinct(F.struct(F.col("chunk_hash"), F.col("source"))))
@@ -932,8 +889,7 @@ object Dedup {
     * (~12 GB of scalar pair rows). Raise it on a real cluster; the
     * default is sized so a single machine degrades instead of dying. */
   private def pairBudget(spark: org.apache.spark.sql.SparkSession): Long =
-    try spark.conf.get("graft.containment.maxPairs").toLong
-    catch { case _: Throwable => 500000000L }
+    Knobs.long(spark, "graft.containment.maxPairs", 500000000L)
 
   /** Row bound for the containment family's conditional broadcasts:
     * 8M rows of one or two longs, ≈ 128-256 MB. */
@@ -1233,9 +1189,7 @@ object Dedup {
     // bounds every cell's pair exchange by the budget again. The cap is
     // a conf (`graft.containment.maxSideAWaves`) so specs and clusters
     // with different executor counts can move it.
-    val maxW1 =
-      try spark.conf.get("graft.containment.maxSideAWaves").toInt
-      catch { case _: Throwable => 1024 }
+    val maxW1 = Knobs.int(spark, "graft.containment.maxSideAWaves", 1024)
     val w1 = math.min(wavesRaw, math.max(1, maxW1).toLong).toInt
     val w2 = math.ceil(wavesRaw.toDouble / math.max(1, w1)).toInt
     val waves = w1 * w2
@@ -1323,10 +1277,8 @@ object Dedup {
       // the budget-sized shuffle — becomes collectable before the next
       // wave starts (the gc nudge drains the ContextCleaner), so peak
       // LIVE shuffle is ~one wave instead of the full mass.
-      val waveDir =
-        try Some(spark.conf.get("graft.containment.waveDir"))
-            .filter(_.nonEmpty).map(_ + s"/$tag-waves-" + java.util.UUID.randomUUID)
-        catch { case _: Throwable => None }
+      val waveDir = Knobs.get(spark, "graft.containment.waveDir", Option.empty[String])(Some(_))
+        .filter(_.nonEmpty).map(_ + s"/$tag-waves-" + java.util.UUID.randomUUID)
       waveDir match {
         case Some(dir) =>
           // registered like a tracked cache: the returned plan reads

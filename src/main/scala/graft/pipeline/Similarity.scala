@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
-import graft.core.Estimates
+import graft.core.{Estimates, Knobs}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
@@ -19,15 +19,6 @@ import graft.core.Estimates
   * seeded hash (deterministic, no stored model).
   */
 object Similarity {
-
-  /** dot(a, b) over float arrays, accumulated in double — zip_with +
-    * aggregate form (reference implementation; higher-order functions
-    * are interpreted in Spark, so the hot path below uses the kernel). */
-  def dot(a: Column, b: Column): Column =
-    F.aggregate(F.zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      F.lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = F.sqrt(dot(a, a))
 
   /** Cosine kernel: one compiled pass computing dot and both norms.
     * The expression form is three interpreted HOF chains per pair (with
@@ -53,8 +44,8 @@ object Similarity {
   /** Codegen path: the native `CosineSim` Catalyst expression — no UDF
     * boundary, inlines into whole-stage codegen. Needs a session to
     * resolve the registered function, so operators call this with their
-    * input's session; `cosine` above stays as the sessionless fallback
-    * (identical semantics, shared by the ScalaTest ground truths). */
+    * input's session; `cosine` above is the reference kernel it is
+    * tested against (identical semantics). */
   def cosineNative(spark: org.apache.spark.sql.SparkSession)
                   (a: Column, b: Column): Column = {
     graft.exprs.GraftFunctions.register(spark)
@@ -157,13 +148,11 @@ object Similarity {
     majorityVote(votes)
   }
 
-  /** Exact cosine pairs above a threshold — the verification stage of
-    * embedding near-dup. All-pairs by construction, so at 100 TB this is
-    * NEVER called on a whole corpus: callers feed it LSH/IVF candidate
-    * buckets (`Dedup`/`hyperplaneBucket`) and it verifies only those.
-    * The all-pairs form here is the exactness anchor the approximate
-    * paths are tested against. Pairs are emitted once (idA < idB); the
-    * left side is broadcast when small, the right streams. */
+  /** Exact cosine pairs above a threshold, all-pairs by construction —
+    * the test anchor [[cosinePairsComplete]] is checked against. At
+    * scale pairs come from [[cosinePairsComplete]], which verifies only
+    * its cell candidates. Pairs are emitted once (idA < idB); the left
+    * side is broadcast, the right streams. */
   def cosinePairs(corpus: DataFrame, threshold: Double,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cos = cosineNative(corpus.sparkSession) _
@@ -174,11 +163,6 @@ object Similarity {
       .filter(F.col("cos") > threshold)
   }
 
-  /** Top-n cells per row against a broadcast centroid frame, computed on
-    * a SCALAR-ONLY frame: centroids broadcast against (id, vec),
-    * immediately projected to (id, cell, sim) — the top-n window's
-    * shuffle never carries vector payloads (n·nlist scalar triples, not
-    * n·nlist vectors). */
   /** Centroids collapsed to ONE broadcast row holding the whole
     * (cell, centroid) array — the carrier for per-row top-n cell
     * selection without any shuffle. Sorted for a deterministic array
@@ -196,38 +180,17 @@ object Similarity {
       (-cos(vec, s.getField("centroid"))).as("negsim"),
       s.getField("cell").as("cell")))
 
-  /** Nearest `n` cells per vector — MAP-ONLY (r13). The previous shape
-    * (vectors × centroids crossJoin → `Window.partitionBy(id)`) hash-
-    * shuffled the full n·nlist sims frame just to rank it: Θ(n^1.5)
-    * shuffle bytes under the m·√n nlist rule, which is exactly what
-    * killed the ×1000 vector probe on this box (~0.9 TB of shuffle for
-    * 2M vectors; the disk filled). Selecting the top-n INSIDE the row —
-    * an array expression over the broadcast centroid array — does the
-    * identical nlist cosines with ZERO exchange: argmax via array_min
-    * for n = 1, an in-row sort for small n > 1. Same picks, same ties,
-    * no shuffle at any n. */
-  private def nearestCells(df: DataFrame, centroids: DataFrame,
-                           id: String, vec: String, n: Int,
-                           cos: (Column, Column) => Column): DataFrame = {
-    val sims = simStructs(F.col(vec), cos)
-    val top = if (n == 1) F.array(F.array_min(sims)) else F.slice(F.array_sort(sims), 1, n)
-    df.select(F.col(id), F.col(vec))
-      .crossJoin(F.broadcast(centroidArray(centroids)))
-      // explode evaluates `top` ONCE per row; a two-step projection would
-      // let CollapseProject duplicate the whole nlist-cosine pass per
-      // referenced field
-      .select(F.col(id), F.explode(top).as("__b"))
-      .select(F.col(id), F.col("__b").getField("cell").as("cell"))
-  }
-
-  /** [[nearestCells]] that CARRIES the source vector through the
-    * assignment projection (r14, verdict item 3). Every r13 caller
-    * immediately re-joined the (id, cell) assignment to the corpus on id
-    * to recover the vector — a sort-merge self-join shuffling ~2n
-    * vector-carrying rows (~600 MiB per side, twice, at the ×1000
-    * probe). The pass-through produces the identical frame with ZERO
-    * exchange; for n > 1 the vector is duplicated n× map-side, still
-    * exchange-free and cheaper than re-keying the corpus. */
+  /** Nearest `n` cells per vector, CARRYING the source vector through
+    * the assignment — MAP-ONLY (r13, r14). Ranking a vectors ×
+    * centroids crossJoin through `Window.partitionBy(id)` hash-shuffled
+    * Θ(n^1.5) bytes under the m·√n nlist rule (~0.9 TB for the ×1000
+    * probe's 2M vectors; the disk filled), and re-joining an (id, cell)
+    * assignment to the corpus to recover the vector shuffled ~2n
+    * vector-carrying rows. Selecting the top-n INSIDE the row — an array
+    * expression over the broadcast centroid array — does the identical
+    * nlist cosines with ZERO exchange: argmax via array_min for n = 1,
+    * an in-row sort for small n > 1 (the vector is duplicated n×
+    * map-side). Same picks, same ties, no shuffle at any n. */
   private[graft] def nearestCellsCarry(df: DataFrame, centroids: DataFrame,
                                        id: String, vec: String, n: Int,
                                        cos: (Column, Column) => Column): DataFrame = {
@@ -235,12 +198,16 @@ object Similarity {
     val top = if (n == 1) F.array(F.array_min(sims)) else F.slice(F.array_sort(sims), 1, n)
     df.select(F.col(id), F.col(vec))
       .crossJoin(F.broadcast(centroidArray(centroids)))
+      // explode evaluates `top` ONCE per row; a two-step projection would
+      // let CollapseProject duplicate the whole nlist-cosine pass per
+      // referenced field
       .select(F.col(id), F.col(vec), F.explode(top).as("__b"))
       .select(F.col(id), F.col(vec), F.col("__b").getField("cell").as("cell"))
   }
 
-  /** [[nearestCells]] n = 1 variant that also keeps the assignment sim
-    * (cosinePairsComplete needs it for the covering radius α). */
+  /** [[nearestCellsCarry]] n = 1 variant that keeps the assignment sim
+    * instead of the vector (cosinePairsComplete needs it for the
+    * covering radius α). */
   private def assignCellsWithSim(df: DataFrame, centroids: DataFrame,
                                  id: String, vec: String,
                                  cos: (Column, Column) => Column): DataFrame =
@@ -345,158 +312,20 @@ object Similarity {
       .filter(F.col("rank") <= k)
   }
 
-  /** Exact cosine pairs above a threshold, candidate-fed from IVF cell
-    * co-assignment — the scale path `cosinePairs` documents: every
-    * vector is assigned to its `mprobe` nearest of `nlist` cells, pairs
-    * co-assigned to ≥1 cell become candidates (a scalar (id, cell)
-    * self-join — vectors stay out of it), and ONLY candidates get the
-    * exact cosine verify. Work is Σ_cell |cell|² instead of |corpus|² —
-    * at scale nlist grows with the corpus, bounding cell size, so the
-    * join is linear-ish rather than quadratic, and no corpus×corpus
-    * join appears anywhere in the plan.
-    *
-    * Recall is empirical (cell co-assignment is not a containment proof
-    * for arbitrary thresholds); the registered q55 pins it against the
-    * all-pairs DuckDB oracle — hash-equality asserts candidates ⊇ every
-    * true pair at the tested scales. `cosinePairs` (all-pairs) remains
-    * the test-only exactness anchor.
-    *
-    * Ad-hoc callers should prefer [[cosinePairsAuto]]: it routes the
-    * high-threshold near-dup regime here (where this path's recall is
-    * pinned and the probe fan-out of the complete path buys nothing)
-    * and low thresholds to [[cosinePairsComplete]] (where THIS path
-    * was measured missing ~9% of true pairs at τ = 0.4). */
-  def cosinePairsViaCells(corpus: DataFrame, threshold: Double,
-                          nlist: Int = -1, mprobe: Int = 8, iters: Int = 2,
-                          idCol: String = "vec_id", vecCol: String = "embedding",
-                          rowCount: Long = -1L): DataFrame = {
-    val cos = cosineNative(corpus.sparkSession) _
-    val c = corpus.select(F.col(idCol).as("cid0"), F.col(vecCol).as("cv"))
-    // nlist must GROW with the corpus or cell size — and with it the
-    // per-cell quadratic verify — grows linearly and the join degrades
-    // toward all-pairs. Auto (-1) picks m·√n, the analytic optimum:
-    // cost is assignment O(n·nlist) + verify O(Σ|cell|²) =
-    // O(n²m²/nlist), and nlist = m·√n balances the two terms at
-    // ~m·n^1.5 total — the best achievable exponent for this family.
-    // The r6 rule min(n/125, m·√n) kept assignment at n²/125 below
-    // ~1M vectors (QUADRATIC, the family's only super-linear term);
-    // r8 moved to m·√n at all scales after re-pinning recall: q55/
-    // q56/q58 hash-match their all-pairs oracles at every tested SF
-    // with the finer partitioning (nlist 16 → ~360 at n = 2000),
-    // measured ~25% faster at the 200k-vector probe point. A pure
-    // √n rule (without the m factor) measured e = 1.57 — it starves
-    // cells m-fold and inflates the verify term; the m multiplier is
-    // load-bearing.
-    // Auto-nlist needs the corpus size, but a count() here is a driver
-    // action inside query CONSTRUCTION — every build (explain, the
-    // cartesian plan guard) would pay a scan. Callers that know the
-    // size pass `rowCount`; otherwise the count is memoized per
-    // canonicalized corpus plan, so repeated builds of the same query
-    // cost one job total, not one per build.
-    val total: Long =
-      if (nlist > 0) -1L
-      else if (rowCount >= 0) rowCount
-      else Estimates.count(c).get
-    val n = if (nlist > 0) nlist
-      else math.max(16, math.ceil(mprobe * math.sqrt(total.toDouble)).toInt)
-    // Lloyd rounds only need REPRESENTATIVE centroids, not every row:
-    // train on a bounded deterministic prefix (lowest ids — same init
-    // the full path uses), then assign the whole corpus once. Identical
-    // to full training for corpora under the cap, linear above it. The
-    // cap must scale with nlist (≥ a few vectors per cell) or a fixed
-    // 4000 would silently clamp the m·√n regime's cell count — limit(n)
-    // over fewer than n rows returns fewer than n centroids.
-    val trainCap = math.max(4000L, 8L * n)
-    // limit over fewer rows returns them all, so the bounded prefix IS
-    // the full corpus whenever total <= cap — no size check needed,
-    // which keeps this branch-free of driver actions on the nlist /
-    // rowCount-hinted paths.
-    val trainSet = c.orderBy("cid0").limit(trainCap.toInt)
-    val centroids = trainCentroids(trainSet, n, iters, cos)
-    // persist: both join sides below derive from `cells`, and without
-    // the cache each side re-runs the full corpus×centroid assignment
-    // (the n·nlist cosine term — the single most expensive stage) —
-    // the frame is (id, cell) scalars, so the cache is tiny at any n
-    val cells = graft.core.CacheRegistry.track("cosinePairsViaCells.cells",
-      nearestCells(c, centroids, "cid0", "cv", mprobe, cos))
-    // The Σ|cell|² candidate explosion is generated by joining two
-    // frames of TINY bytes ((id, cell) scalars) whose per-row DOWNSTREAM
-    // cost is huge — AQE coalesces the streamed side to ~2 partitions by
-    // shuffle size, and the explosion plus the distinct's partial hash
-    // aggregation then run 2-wide with multi-hundred-million-entry maps
-    // (measured: 423 s vs ~40 s for q58's 200k-vector probe). A NUMERIC
-    // repartition is exempt from AQE coalescing, so pin the stage width
-    // explicitly — and DERIVE it from the same Σ|cell|² estimate the
-    // design's cost model rests on (balanced cells ⇒ expected candidates
-    // ≈ (n·m)²/nlist), so each partition's share stays bounded at any
-    // corpus size instead of machine width silently becoming
-    // rows/32-per-partition at 100× (r8 verdict task 3).
-    val machine = math.max(corpus.sparkSession.sparkContext.defaultParallelism,
-      corpus.sparkSession.sessionState.conf.numShufflePartitions)
-    val estCand: Double =
-      if (total >= 0) { val nm = total.toDouble * mprobe; nm * nm / n } else -1.0
-    val parts = Explosion.width(estCand, machine)
-    Explosion.logWidth("cosinePairsViaCells", estCand, parts)
-    val a = cells.repartition(parts, F.col("cell"))
-      .select(F.col("cid0").as("id_a"), F.col("cell"))
-    val b = cells.select(F.col("cid0").as("id_b"), F.col("cell"))
-    val candDup = a.join(b, "cell").filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b")
-    // Verify payload joins: the candidate stream is O(Σ|cell|²) SCALAR
-    // pairs, and a sort-merge join against the vector payloads turns it
-    // into (pair, 256B-vector) rows that must SORT — the 100× probe
-    // (200k vectors, ~7e8 candidates) spilled ~78 GB and died on disk.
-    // When the corpus is broadcast-sized (id→vec map; n·dim·4B ≈ 51 MB
-    // at 200k×64f, well under executor memory at any sane config) hint
-    // BOTH payload sides broadcast — and dedupe AFTER the threshold
-    // filter instead of before the join: the full chain
-    // explode→join→cosine→filter then pipelines in ONE stage (the only
-    // wide op left is the final tiny distinct), where a pre-join
-    // `.distinct()` on ~7e8 pairs cost a ~22 GB exchange plus a
-    // 3.6e8-key aggregate. Duplicated candidates (pairs sharing
-    // several cells, ≤ mprobe of them) recompute the same cosine —
-    // compiled-kernel flops are ~3× cheaper than shuffling the pair
-    // set, and identical inputs give bit-identical cosines, so the
-    // late distinct is exact. Above the broadcast bound the r11 starved
-    // probe KILLED the old dedupe-early + shuffled-join fallback: the
-    // second payload join re-keys the pair stream by id_b carrying the
-    // attached 256 B vector — ~2×10^11 bytes of exchange at 7e8
-    // candidates — and its sort-merge sorts spilled past all scratch
-    // (disk death in <6 min). The shuffle-honest shape instead carries
-    // the vectors THROUGH the cell join: both join sides are
-    // corpus-sized (n·mprobe rows of (id, vec), keyed by cell), and the
-    // Σ|cell|² explosion flows straight into cosine→filter inside the
-    // join stage — pipelined, never exchanged — so the only pair-sized
-    // shuffle left is the survivors-only distinct. Duplicated
-    // candidates (≤ mprobe per pair) recompute bit-identical cosines,
-    // same argument as the broadcast path's dedupe-late.
-    if (total >= 0 && broadcastableVecs(c, "cv", total)) {
-      val va = corpus.select(F.col(idCol).as("id_a"), F.col(vecCol).as("va"))
-      val vb = corpus.select(F.col(idCol).as("id_b"), F.col(vecCol).as("vb"))
-      candDup
-        .join(F.broadcast(va), "id_a")
-        .join(F.broadcast(vb), "id_b")
-        .select(F.col("id_a"), F.col("id_b"), cos(F.col("va"), F.col("vb")).as("cos"))
-        .filter(F.col("cos") > threshold)
-        .distinct()
-    } else {
-      val withVec = cells.join(c.select(F.col("cid0"), F.col("cv")), "cid0")
-      val a2 = withVec.repartition(parts, F.col("cell"))
-        .select(F.col("cid0").as("id_a"), F.col("cell"), F.col("cv").as("va"))
-      val b2 = withVec
-        .select(F.col("cid0").as("id_b"), F.col("cell"), F.col("cv").as("vb"))
-      a2.join(b2, "cell").filter(F.col("id_a") < F.col("id_b"))
-        .select(F.col("id_a"), F.col("id_b"), cos(F.col("va"), F.col("vb")).as("cos"))
-        .filter(F.col("cos") > threshold)
-        .distinct()
-    }
-  }
+  /** The complete path's shared front half: sims, assignment, covering
+    * radius and probe cutoff — used by the operator and by the
+    * [[cosinePairsCompleteStats]] capacity diagnostic. */
+  private case class CompleteParts(c: DataFrame, allSims: DataFrame,
+                                   assigned: DataFrame, alphaRow: DataFrame,
+                                   cutoff: Column, total: Long)
 
-  /** PROVABLY-COMPLETE cosine pairs above a threshold — the
-    * triangle-inequality variant of [[cosinePairsViaCells]] (r11: the
-    * sf0.1 sweep caught the empirical cell co-assignment missing ~9% of
-    * true pairs at τ = 0.4 — low thresholds mean 66° of angular
-    * separation, far beyond what shared-nearest-cell candidates cover).
+  /** Exact cosine pairs above a threshold, candidate-fed from IVF cells —
+    * the embedding near-dup operator. Candidates are PROVABLY COMPLETE
+    * (a lossless centroid reference-point bound): no true pair is
+    * missed at any threshold, and no corpus×corpus join appears in the
+    * plan. (r11: an empirical shared-nearest-cell candidate set missed
+    * ~9% of true pairs at τ = 0.4 — 66° of angular separation, far
+    * beyond what co-assignment covers.)
     *
     * Guarantee: every vector u is assigned its single nearest cell
     * c(u); every vector v probes ALL cells within angle
@@ -509,28 +338,19 @@ object Similarity {
     *
     * Both α and the probe cutoff ride the plan as broadcast one-row
     * frames (cos(A+B) = cosA·cosB − sinA·sinB on sim columns), so plan
-    * construction stays job-free.
+    * construction stays job-free when the caller passes `nlist` or
+    * `rowCount`; otherwise auto-nlist sizes the corpus with one
+    * memoized count.
     *
     * Cost: probe fan-out grows as τ drops — at τ → 0 the radius
     * approaches 90°+α and the join degrades smoothly toward all-pairs,
     * which is the true answer density's own trajectory; at the high
     * thresholds of near-dup dedup (τ ≥ 0.8, radius ≤ 37°+α) the probe
-    * set stays small and the operator scales like the empirical path.
-    * Outlier vectors (far from every centroid) inflate α and therefore
-    * COST, never correctness — including past the π radius (τ + cosα
-    * ≤ 0), where the cutoff clamps to −1 and they probe every cell
-    * (PipelineSpec pins the antipodal-outlier geometry).
-    *
-    * Ad-hoc callers should prefer [[cosinePairsAuto]], which routes
-    * the high-threshold regime to the cheaper empirical path and only
-    * pays this path's probe fan-out where the guarantee is needed. */
-  /** The complete path's shared front half: sims, assignment, covering
-    * radius and probe cutoff — used by the operator and by the
-    * [[cosinePairsCompleteStats]] capacity diagnostic. */
-  private case class CompleteParts(c: DataFrame, allSims: DataFrame,
-                                   assigned: DataFrame, alphaRow: DataFrame,
-                                   cutoff: Column, total: Long)
-
+    * set stays small. Outlier vectors (far from every centroid) inflate
+    * α and therefore COST, never correctness — including past the π
+    * radius (τ + cosα ≤ 0), where the cutoff clamps to −1 and they
+    * probe every cell (PipelineSpec pins the antipodal-outlier
+    * geometry). [[cosinePairsCompleteStats]] prices a run first. */
   def cosinePairsComplete(corpus: DataFrame, threshold: Double,
                           nlist: Int = -1, iters: Int = 2,
                           idCol: String = "vec_id", vecCol: String = "embedding",
@@ -538,21 +358,6 @@ object Similarity {
     completePairsFrom(
       completeParts(corpus, threshold, nlist, iters, idCol, vecCol, rowCount),
       corpus, threshold, idCol, vecCol)
-
-  /** The operator and its capacity diagnostic from ONE shared front half
-    * (r14): running [[cosinePairsCompleteStats]] as the pre-flight and
-    * then [[cosinePairsComplete]] as separate calls persists two
-    * independent copies of the n-row assigned frame under one registry
-    * tag — doubled executor memory and double-counted bench bytes, with
-    * no plan reuse. This entry point prices and runs against the SAME
-    * cached assignment: returns (stats, pairs). */
-  def cosinePairsCompleteWithStats(corpus: DataFrame, threshold: Double,
-                                   nlist: Int = -1, iters: Int = 2,
-                                   idCol: String = "vec_id", vecCol: String = "embedding",
-                                   rowCount: Long = -1L): (DataFrame, DataFrame) = {
-    val p = completeParts(corpus, threshold, nlist, iters, idCol, vecCol, rowCount)
-    (completeStatsFrom(p), completePairsFrom(p, corpus, threshold, idCol, vecCol))
-  }
 
   private def completePairsFrom(p: CompleteParts, corpus: DataFrame,
                                 threshold: Double,
@@ -566,6 +371,10 @@ object Similarity {
       .filter(F.col("id_a") =!= F.col("id_b"))
     val va = corpus.select(F.col(idCol).as("id_a"), F.col(vecCol).as("va"))
     val vb = corpus.select(F.col(idCol).as("id_b"), F.col(vecCol).as("vb"))
+    // verify payloads: both id → vector sides broadcast while the corpus
+    // fits [[broadcastVecMaxBytes]] (the 100× probe's 200k×64f ≈ 54 MB
+    // does), so the candidate stream never sorts with vectors attached;
+    // above it, shuffled id joins. Both branches emit the same pairs.
     val verified =
       if (p.total >= 0 && broadcastableVecs(p.c, "cv", p.total))
         cand.join(F.broadcast(va), "id_a").join(F.broadcast(vb), "id_b")
@@ -579,16 +388,17 @@ object Similarity {
   }
 
   /** Capacity diagnostic for [[cosinePairsComplete]] — ONE output row:
-    * `n`, `nlist`, `cos_alpha` (covering radius), `cutoff`, `probe_rows`
-    * (survivors of the radius filter) and `candidate_pairs`
+    * `n`, `probe_rows` (survivors of the radius filter),
+    * `cos_alpha` (covering radius) and `candidate_pairs`
     * (Σ_cell |assigned| · |probes| — the exact pre-filter size of the
     * candidate join). The probe fan-out is radius-driven: at the
     * near-dup thresholds it is a small multiple of n, but at low τ the
     * geometry makes candidate volume the binding constraint (the ×1000
     * probe filled a 75 GB scratch disk at τ = 0.4 / 2M vectors) — this
     * method prices the join with two cheap aggregations (no candidate
-    * row is ever materialized) so a caller can provision or re-route to
-    * [[cosinePairsAuto]] BEFORE running it. */
+    * row is ever materialized) so a caller can provision, or raise τ
+    * or nlist, BEFORE running it. Separate stats and pairs calls over
+    * one corpus share ONE tracked assignment cache. */
   def cosinePairsCompleteStats(corpus: DataFrame, threshold: Double,
                                nlist: Int = -1, iters: Int = 2,
                                idCol: String = "vec_id", vecCol: String = "embedding",
@@ -622,11 +432,22 @@ object Similarity {
       if (rowCount >= 0) rowCount
       else if (nlist > 0) -1L // explicit nlist: plan construction stays job-free
       else Estimates.count(c).get
-    // same m·√n sizing rule as the empirical path (m = 8 default probe
-    // breadth there; here the probe set is radius-driven, but cell
-    // granularity still wants to grow with the corpus)
+    // nlist must GROW with the corpus or cell size — and with it the
+    // per-cell candidate join — grows linearly and the join degrades
+    // toward all-pairs. Auto (-1) picks m·√n with m = 8: assignment
+    // O(n·nlist) balances a Σ|cell|² candidate term of O(n²m²/nlist)
+    // at ~m·n^1.5 total (r8). A pure √n rule measured e = 1.57 — the
+    // m multiplier is load-bearing. The probe set is radius-driven, but
+    // cell granularity still wants to grow with the corpus. An explicit
+    // `nlist` or `rowCount` keeps construction job-free; otherwise the
+    // size is one count memoized per (plan, file state).
     val n = if (nlist > 0) nlist
       else math.max(16, math.ceil(8 * math.sqrt(total.toDouble)).toInt)
+    // Lloyd rounds only need REPRESENTATIVE centroids: train on a bounded
+    // deterministic prefix (lowest ids), then assign the whole corpus
+    // once — identical to full training under the cap, linear above it.
+    // The cap scales with nlist (≥ 8 vectors per cell): limit(n) over
+    // fewer than n rows would silently return fewer than n centroids.
     val trainCap = math.max(4000L, 8L * n)
     val trainSet = c.orderBy("cid0").limit(trainCap.toInt)
     val centroids = trainCentroids(trainSet, n, iters, cos)
@@ -669,42 +490,6 @@ object Similarity {
     CompleteParts(c, allSims, assigned, alphaRow, cutoff, total)
   }
 
-  /** Threshold boundary for [[cosinePairsAuto]]: at or above this τ the
-    * empirical cell path runs; below it the complete path. Default 0.8
-    * — the near-dup regime's floor, where the co-assignment radius
-    * (≤ 37°) comfortably covers true pairs (q55's recall hole appeared
-    * at τ = 0.4, 66°; every tested τ ≥ 0.8 hash-matches the all-pairs
-    * oracle at sf0.001/0.01/0.1). Override via
-    * `graft.cosinePairs.autoTau`; set > 1.0 to force the complete path
-    * everywhere. */
-  def cosinePairsAutoTau(spark: org.apache.spark.sql.SparkSession): Double =
-    try spark.conf.get("graft.cosinePairs.autoTau", "0.8").toDouble
-    catch { case _: Throwable => 0.8 }
-
-  /** Dispatcher over the two cosine-pairs paths (r11 verdict task 4;
-    * pattern: `TextOps.qualityGateAuto`): high thresholds route to the
-    * empirical [[cosinePairsViaCells]] (cheaper — no probe fan-out,
-    * recall pinned against the all-pairs oracle in the near-dup
-    * regime), low thresholds to the provably-complete
-    * [[cosinePairsComplete]] (triangle-inequality candidate guarantee
-    * at ANY τ — the radius the empirical path's recall hole was found
-    * at). Callers who need the guarantee at every τ regardless of cost
-    * call the complete path directly (as q55/q58's registrations do);
-    * this entry point is the ad-hoc default. */
-  def cosinePairsAuto(corpus: DataFrame, threshold: Double,
-                      nlist: Int = -1, iters: Int = 2,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      rowCount: Long = -1L): DataFrame =
-    if (threshold >= cosinePairsAutoTau(corpus.sparkSession))
-      cosinePairsViaCells(corpus, threshold, nlist, 8, iters, idCol, vecCol, rowCount)
-    else
-      // through the SHARED front half (r15 verdict item 6): an ad-hoc
-      // caller who also prices the run (the stats twin) reuses this
-      // build's assignment cache instead of constructing a second one;
-      // the unused stats frame is lazy — costs nothing here
-      cosinePairsCompleteWithStats(
-        corpus, threshold, nlist, iters, idCol, vecCol, rowCount)._2
-
   /** Byte budget for [[cosinePairsComplete]]'s tracked (id, cell, sim)
     * assignment cache: default 8 GiB — comfortably held by one big
     * executor's storage fraction and far under this box's 128 GiB, yet
@@ -713,9 +498,7 @@ object Similarity {
     * scale. Override per session via `graft.simsCacheMaxBytes`
     * (specs/probes use a tiny value to force the uncached branch). */
   def simsCacheMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    try spark.conf.get("graft.simsCacheMaxBytes",
-      (8L * 1024 * 1024 * 1024).toString).toLong
-    catch { case _: Throwable => 8L * 1024 * 1024 * 1024 }
+    Knobs.long(spark, "graft.simsCacheMaxBytes", 8L * 1024 * 1024 * 1024)
 
   /** Whether [[cosinePairsComplete]] caches its assignment frame of
     * `total` rows: an unknown size (`total < 0`) or `total` × 64 B within
@@ -728,8 +511,7 @@ object Similarity {
     * many rows, default 8M (two ids a row, ~128-256 MB). Override per
     * session via `graft.knn.maxBroadcastSurvivors`. */
   def maxBroadcastSurvivors(spark: org.apache.spark.sql.SparkSession): Long =
-    try spark.conf.get("graft.knn.maxBroadcastSurvivors", "8000000").toLong
-    catch { case _: Throwable => 8000000L }
+    Knobs.long(spark, "graft.knn.maxBroadcastSurvivors", 8000000L)
 
   /** Byte budget for broadcasting the verify join's (id → vector)
     * payload (r10 verdict task 1 — the bound is BYTES-adaptive, not a
@@ -739,9 +521,7 @@ object Similarity {
     * via `graft.broadcastVecMaxBytes` (probes use this to force the
     * shuffled fallback at corpus sizes a test box can build). */
   def broadcastVecMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    try spark.conf.get("graft.broadcastVecMaxBytes",
-      (128L * 1024 * 1024).toString).toLong
-    catch { case _: Throwable => 128L * 1024 * 1024 }
+    Knobs.long(spark, "graft.broadcastVecMaxBytes", 128L * 1024 * 1024)
 
   /** Decide the verify-join branch: true iff `total` vectors of this
     * corpus fit the broadcast byte budget. Row bytes come from the

@@ -417,7 +417,7 @@ object PipelineQueries extends QueryPack {
         val b = docs.select(F.col("doc_id").as("id_b"), F.col("sh").as("sh_b"))
         a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
           .select(F.col("id_a"), F.col("id_b"),
-            Dedup.jaccardNative(F.col("sh_a"), F.col("sh_b")).as("jaccard"))
+            Dedup.jaccard(F.col("sh_a"), F.col("sh_b")).as("jaccard"))
           .filter(F.col("jaccard") >= 0.2)
           .orderBy("id_a", "id_b")
       },
@@ -452,8 +452,8 @@ object PipelineQueries extends QueryPack {
     // differs across engines.
     // (These two fix τ = 0.99, where one-bucket LSH recall is exact by
     // the identical-vector argument. Pair mining at ARBITRARY τ goes
-    // through Similarity.cosinePairsAuto instead — τ-dispatched between
-    // the empirical cell path and the guaranteed complete path.)
+    // through Similarity.cosinePairsComplete, whose candidates are
+    // complete at any τ — q55, q58.)
     // Incremental embedding near-dup: new vector batch (shifted copy)
     // against the stored hyperplane index — q80's embedding twin. Same
     // 0.99 threshold and containment argument as q44: identical vectors

@@ -25,7 +25,7 @@ class PipelineSpec extends AnyFunSuite {
     val withBands = docs
       .select(F.col("doc_id"), Dedup.shingles(F.col("text")).as("sh"))
       .select(F.col("doc_id"), F.col("sh"),
-        Dedup.bandKeys(Dedup.minhashSignature(F.col("sh")), 8, 4).as("bands"))
+        Dedup.bandKeysDirect(F.col("sh"), k = 32, bands = 8).as("bands"))
     val cand = Dedup.candidatePairs(withBands, "doc_id", "bands")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cand.contains((0L, 1L)), s"exact dup pair missing from $cand")
@@ -39,14 +39,16 @@ class PipelineSpec extends AnyFunSuite {
       (100L, "the quick brown fox jumps over the lazy dog again and again"), // dup of 0,1
       (101L, "fresh novel sentences that appear nowhere in the index corpus"))
       .toDF("doc_id", "text"), "doc_id", "text").persist()
-    val pairs = Dedup.incrementalPairs(index, batch, 0.8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // the duplicate batch doc matches BOTH identical index docs at J=1
-    assert(pairs.map(p => (p._1, p._2)).toSet == Set((0L, 100L), (1L, 100L)),
-      s"got ${pairs.toSeq}")
-    assert(pairs.forall(_._3 == 1.0))
-    // result never contains index-internal pairs (both ids < 100)
-    assert(pairs.forall(_._2 >= 100L))
+    try {
+      val pairs = Dedup.incrementalPairs(index, batch, 0.8).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      // the duplicate batch doc matches BOTH identical index docs at J=1
+      assert(pairs.map(p => (p._1, p._2)).toSet == Set((0L, 100L), (1L, 100L)),
+        s"got ${pairs.toSeq}")
+      assert(pairs.forall(_._3 == 1.0))
+      // result never contains index-internal pairs (both ids < 100)
+      assert(pairs.forall(_._2 >= 100L))
+    } finally { index.unpersist(); batch.unpersist() }
   }
 
   test("bucketed LSH index store: same pairs, zero index-side exchange") {
@@ -56,17 +58,17 @@ class PipelineSpec extends AnyFunSuite {
       (101L, "fresh novel sentences that appear nowhere in the index corpus"))
       .toDF("doc_id", "text")
     val batch = Dedup.lshIndex(batchDocs, "doc_id", "text").persist()
-    Dedup.writeLshIndexBucketed(index, "lsh_ix_spec", buckets = 8)
-    val stored = Dedup.incrementalPairsStored(spark, "lsh_ix_spec", batch, 0.8)
-    // semantics: identical pair set to the unbucketed incremental path
-    val expect = Dedup.incrementalPairs(index, batch, 0.8).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(stored.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == expect)
-    // plan: with broadcast off, every index-side stage (bucket profile,
-    // candidate join, payload verify) must ride the buckets — exactly
-    // ONE batch-side exchange per join key, none for the index
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
+      Dedup.writeLshIndexBucketed(index, "lsh_ix_spec", buckets = 8)
+      val stored = Dedup.incrementalPairsStored(spark, "lsh_ix_spec", batch, 0.8)
+      // semantics: identical pair set to the unbucketed incremental path
+      val expect = Dedup.incrementalPairs(index, batch, 0.8).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(stored.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == expect)
+      // plan: with broadcast off, every index-side stage (bucket profile,
+      // candidate join, payload verify) must ride the buckets — exactly
+      // ONE batch-side exchange per join key, none for the index
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val plan = Dedup.incrementalPairsStored(spark, "lsh_ix_spec", batch, 0.8)
         .queryExecution.executedPlan.toString
@@ -80,7 +82,10 @@ class PipelineSpec extends AnyFunSuite {
         s"expected exactly 1 id_a-only exchange (the candidate side):\n$plan")
       // and the index scans themselves ride their buckets
       assert(n("Bucketed: true") >= 3, s"index scans must be bucketed:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      batch.unpersist()
+    }
   }
 
   test("cache hygiene: registry releases every operator persist (r10 verdict 4)") {
@@ -160,6 +165,27 @@ class PipelineSpec extends AnyFunSuite {
     }
     assert(spilled.toSeq == full.toSeq, "parquet-spill waves must match too")
     graft.core.CacheRegistry.releaseAll()
+  }
+
+  test("graft.* knobs: unset reads the default, a malformed value fails naming key and value") {
+    val key = "graft.containment.maxPairs"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.unset(key)
+      assert(graft.core.Knobs.long(spark, key, 500000000L) == 500000000L)
+      // a typo used to run silently with the default budget
+      spark.conf.set(key, "5e8")
+      val e = intercept[IllegalArgumentException] {
+        Dedup.containmentPairs(docs, "doc_id", "text", k = 2)
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains("5e8"), e.getMessage)
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      graft.core.CacheRegistry.releaseAll()
+    }
   }
 
   test("containment two-level wave grid (past the side-A cap) is bit-identical (r16 verdict 7)") {
@@ -273,7 +299,7 @@ class PipelineSpec extends AnyFunSuite {
     val vecs = (0L until 64L).map(i =>
       (i, Array.tabulate(8)(d => (i % 7 + d).toFloat))).toDF("vec_id", "embedding")
     val (df, jobs) = TestSpark.built {
-      val df = Similarity.cosinePairsViaCells(vecs, 0.5, rowCount = 64L)
+      val df = Similarity.cosinePairsComplete(vecs, 0.5, rowCount = 64L)
       df.queryExecution.executedPlan.toString // force planning, not execution
       df
     }
@@ -304,28 +330,18 @@ class PipelineSpec extends AnyFunSuite {
       // assert on the id_a/id_b VERIFY joins specifically — the
       // centroid-assignment stage legitimately broadcasts its (tiny)
       // centroid frame in both branches
-      val bc = Similarity.cosinePairsViaCells(vecs, 0.5, rowCount = 64L)
+      val bc = Similarity.cosinePairsComplete(vecs, 0.5, rowCount = 64L)
       val bcPlan = bc.queryExecution.executedPlan.toString
       assert(bcPlan.contains("BroadcastHashJoin [id_a#") &&
           bcPlan.contains("BroadcastHashJoin [id_b#"),
         s"within budget the verify payloads must broadcast:\n$bcPlan")
-      // starve the budget: the carry-through-cell fallback engages —
-      // vectors ride the cell join, so NO id-keyed payload join (of
-      // either kind) may appear; the only pair-keyed exchange is the
-      // survivors-only distinct (r11: the dedupe-early shuffled-join
-      // form re-keyed pairs WITH attached vectors and died on disk at
-      // the 100x starved probe)
+      // starve the budget: neither id-keyed payload join may broadcast
       spark.conf.set("graft.broadcastVecMaxBytes", "100")
-      val sh = Similarity.cosinePairsViaCells(vecs, 0.5, rowCount = 64L)
+      val sh = Similarity.cosinePairsComplete(vecs, 0.5, rowCount = 64L)
       val shPlan = sh.queryExecution.executedPlan.toString
       assert(!shPlan.contains("BroadcastHashJoin [id_a#") &&
-          !shPlan.contains("BroadcastHashJoin [id_b#") &&
-          !shPlan.contains("SortMergeJoin [id_a#") &&
-          !shPlan.contains("SortMergeJoin [id_b#"),
-        s"over budget the verify must not join payloads by id at all:\n$shPlan")
-      assert(shPlan.contains("SortMergeJoin [cell#") ||
-          shPlan.contains("ShuffledHashJoin [cell#"),
-        s"fallback must pair through the cell join:\n$shPlan")
+          !shPlan.contains("BroadcastHashJoin [id_b#"),
+        s"over budget the verify payloads must not broadcast:\n$shPlan")
       // the branch is performance-only: identical pair sets
       def pairs(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -418,9 +434,9 @@ class PipelineSpec extends AnyFunSuite {
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((0L, 1L), (0L, 2L), (1L, 2L)))
     // the candidate-fed scale path must recover the all-pairs anchor
-    val viaCells = Similarity.cosinePairsViaCells(vecs, 0.5, nlist = 2, mprobe = 2)
+    val complete = Similarity.cosinePairsComplete(vecs, 0.5, nlist = 2)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaCells == got)
+    assert(complete == got)
   }
 
   test("IVF ANN recovers brute-force neighbors on separated clusters") {
@@ -849,20 +865,12 @@ class PipelineSpec extends AnyFunSuite {
       (i.toLong, Array.fill(6)(rnd.nextFloat() * 2f - 1f))
     }.toDF("vec_id", "embedding")
     try {
-      val (stats, prs) = Similarity.cosinePairsCompleteWithStats(df, 0.5, nlist = 8, rowCount = 60L)
-      assert(CacheRegistry.trackedTags.count(_ == "cosinePairsComplete.assigned") == 1,
-        s"combined API must track the assignment ONCE: ${CacheRegistry.trackedTags}")
-      // and agrees with the separate-call forms on both surfaces
-      val sep = Similarity.cosinePairsCompleteStats(df, 0.5, nlist = 8, rowCount = 60L).head()
-      assert(stats.head() == sep)
-      val sepPairs = Similarity.cosinePairsComplete(df, 0.5, nlist = 8, rowCount = 60L)
-        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(prs.select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet == sepPairs)
       // r16 re-track guard: the standalone stats-then-run calls used to
       // persist one copy EACH under the shared tag (doubled executor
       // cache + double-counted bench bytes); plan-equal re-tracks now
-      // return the existing frame, so the tag still holds ONE entry
+      // return the existing frame, so the tag holds ONE entry
+      Similarity.cosinePairsCompleteStats(df, 0.5, nlist = 8, rowCount = 60L).head()
+      Similarity.cosinePairsComplete(df, 0.5, nlist = 8, rowCount = 60L).collect()
       assert(CacheRegistry.trackedTags.count(_ == "cosinePairsComplete.assigned") == 1,
         CacheRegistry.trackedTags.toString)
     } finally { CacheRegistry.releaseAll(); spark.catalog.clearCache() }
@@ -949,28 +957,23 @@ class PipelineSpec extends AnyFunSuite {
       val base = Array.fill(4)(0f); base(i % 2) = 1f
       (i.toLong, base.zipWithIndex.map { case (x, j) => x + 0.02f * ((i + j) % 4) })
     }.toDF("vec_id", "embedding")
-    // the complete path's probe-cutoff scalar (__cosA) only exists in
-    // its plan — a structural discriminator for which path was built
-    def isComplete(tau: Double): Boolean =
-      Similarity.cosinePairsAuto(df, tau, nlist = 6)
-        .queryExecution.analyzed.toString.contains("__cosA")
+    // one operator on both sides of the old τ = 0.8 dispatch boundary:
+    // the complete path recovers the all-pairs anchor at every τ
+    def pairs(d: org.apache.spark.sql.DataFrame) =
+      d.select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
     try {
-      assert(!isComplete(0.9), "above the boundary: empirical cells path")
-      assert(!isComplete(0.8), "the boundary itself routes empirical (>= semantics)")
-      assert(isComplete(0.79), "below the boundary: provably-complete path")
-      // conf override: force the complete path everywhere
+      for (tau <- Seq(0.9, 0.8, 0.79, 0.5)) {
+        val exact = pairs(Similarity.cosinePairs(df, tau))
+        assert(exact.nonEmpty, s"tau $tau")
+        assert(pairs(Similarity.cosinePairsComplete(df, tau, nlist = 6)) == exact, s"tau $tau")
+      }
+      // the retired dispatch knob no longer moves the plan
+      def analyzed() = Similarity.cosinePairsComplete(df, 0.9, nlist = 6)
+        .queryExecution.analyzed.toString.replaceAll("#\\d+L?", "")
+      val before = analyzed()
       spark.conf.set("graft.cosinePairs.autoTau", "1.01")
-      assert(isComplete(0.9))
-      spark.conf.unset("graft.cosinePairs.autoTau")
-      // and both routes agree with the all-pairs anchor on this fixture
-      def pairs(d: org.apache.spark.sql.DataFrame) =
-        d.select("id_a", "id_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val exact = pairs(Similarity.cosinePairs(df, 0.9))
-      assert(exact.nonEmpty)
-      assert(pairs(Similarity.cosinePairsAuto(df, 0.9, nlist = 6)) == exact)
-      assert(pairs(Similarity.cosinePairsAuto(df, 0.5, nlist = 6)) ==
-        pairs(Similarity.cosinePairs(df, 0.5)))
+      assert(analyzed() == before)
     } finally {
       spark.conf.unset("graft.cosinePairs.autoTau")
       graft.core.CacheRegistry.releaseAll()
