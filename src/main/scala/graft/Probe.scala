@@ -23,7 +23,7 @@ import graft.probe.{OrdLeg, PipeLeg, QueryLegs, ScaleLegs, StreamLeg}
   *    untimed warm pass, then `reps` (3) timings each beside the
   *    host-speed canary;
   *  - `jobs`: the construction/force split of each query with its Spark
-  *    jobs, `reps` (2) times;
+  *    jobs and codegen compiles, `reps` (2) times;
   *  - `explain`: formatted physical plans;
   *  - `cc`: connected components of a 500k-node graph from a
   *    1-partition and a default-partitioned input, which must agree;

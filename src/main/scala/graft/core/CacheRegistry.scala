@@ -6,7 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 /** Session-scoped registry for the pipeline layer's internal persists
   * (r10 verdict task 4).
   *
-  * Operators like `Dedup.simhashClusters` and `Dedup.containmentPairs`
+  * Operators like `Dedup.containmentPairs` and `Dedup.bloomNewDocs`
   * cache small scalar intermediates that the RETURNED lazy plan still
   * references — the builder can never unpersist them itself, so in a
   * long-lived session (Bench's 92 queries, a notebook) they accumulate
@@ -20,6 +20,14 @@ import scala.collection.mutable.ArrayBuffer
   * session's next `releaseAll`/`clearCache`. Bench releases after every
   * timed query and asserts the block manager is empty at the end of the
   * run; ad-hoc sessions own their release point.
+  *
+  * A persist is not free in a warm session: Spark plans every cached
+  * frame in a clone of the session (auto bucketed scan off), and stages
+  * compiled there are not shared with the next pass's clone, so a
+  * persist that runs every pass recompiles its stages every pass. Where
+  * the consumers of an intermediate can read one exchange instead, that
+  * is the cheaper share (`Dedup.simhashClusters`). Every library tag is
+  * listed, with why its persist exists, in `tools/test_cache_tags.py`.
   */
 object CacheRegistry {
 
@@ -125,9 +133,9 @@ object CacheRegistry {
         if (!cached) p.persist()
         p
       case None =>
-        // the same plan may already be cached under another tag (q42's
-        // simhashWordEdges.words and q79's simhashClusters.words over one
-        // corpus): record the tag, but a second persist only warns
+        // the same plan may already be cached, under another tag or by
+        // the caller's own persist: record the tag, but a second persist
+        // only warns
         if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
         tracked += ((tag, planKey, fileKey, df))
         df

@@ -15,9 +15,9 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   *    names the estimator and its parameters (`"count"`,
   *    `"distinctValues|cap=4096"`, `"quantStats|nq=4"`). Two estimators
   *    over one plan never share an entry.
-  *  - Failure: a job (or key) that throws yields `None` ([[count]]: a
-  *    `Failure` holding the exception) and is never memoized; each
-  *    caller decides whether to fall back or to propagate.
+  *  - Failure: a job (or key) that throws yields `None` ([[count]] and
+  *    [[attempt]]: a `Failure` holding the exception) and is never
+  *    memoized; each caller decides whether to fall back or to propagate.
   *  - Scope: a [[SessionMemo]] per session, at most [[MaxEntries]]
   *    estimates, least recently used out first. No lock is held across
   *    a job: a racing duplicate job is harmless, a blocked build thread
@@ -47,7 +47,8 @@ object Estimates {
     * can fall back (`getOrElse(-1L)`) or rethrow (`get`). */
   def count(sel: DataFrame): Try[Long] = attempt(sel, "count")(_.count())
 
-  private def attempt[V](sel: DataFrame, salt: String)(job: DataFrame => V): Try[V] =
+  /** [[of]], with a failed job handed to the caller as a `Failure`. */
+  def attempt[V](sel: DataFrame, salt: String)(job: DataFrame => V): Try[V] =
     try {
       val (plan, files) = PlanKey.of(sel)
       val k = (plan, files + "|" + salt)

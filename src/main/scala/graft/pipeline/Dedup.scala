@@ -389,7 +389,12 @@ object Dedup {
     * fpp) by the standard -n·ln p/ln²2 formula but clamped to the
     * session's `spark.sql.optimizer.runtime.bloomFilter.maxNumBits`
     * (the aggregate rejects larger): past the clamp the fpp degrades
-    * gracefully — the sketch is a performance layer, never correctness. */
+    * gracefully — the sketch is a performance layer, never correctness.
+    *
+    * The build job is a build-time estimate like any other: memoized in
+    * [[Estimates]] per (key column's plan and files, `expectedItems`,
+    * clamped bits), so a repeat build over unchanged files starts no job.
+    * A failed job propagates. */
   def bloomSketch(index: DataFrame, keyCol: String, expectedItems: Long,
                   fpp: Double = 0.01): Array[Byte] = {
     val spark = index.sparkSession
@@ -399,10 +404,14 @@ object Dedup {
       .get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864").toLong
     val bits = math.max(64L, math.min(want, cap))
     graft.exprs.GraftFunctions.register(spark)
-    index
-      .select(F.call_function("bloom_sketch_agg",
-        F.xxhash64(F.col(keyCol)), F.lit(expectedItems), F.lit(bits)))
-      .head().getAs[Array[Byte]](0)
+    val bytes = Estimates.attempt(index.select(F.col(keyCol)),
+        s"bloomSketch|n=$expectedItems|bits=$bits") { keys =>
+      keys.select(F.call_function("bloom_sketch_agg",
+          F.xxhash64(F.col(keys.columns.head)), F.lit(expectedItems), F.lit(bits)))
+        .head().getAs[Array[Byte]](0)
+    }.get
+    // a copy: the memo keeps the original, which no caller may alter
+    if (bytes == null) null else bytes.clone()
   }
 
   /** Bloom-gated incremental EXACT dedup: the batch documents whose
@@ -657,32 +666,41 @@ object Dedup {
     * with `connectedComponents`. */
   def simhashClusters(docs: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3, maxBucket: Int = 4096): DataFrame = {
-    // null text ⇒ null simhash word; grouping those together would fuse
-    // every null-text document into one bogus "duplicate" cluster, so
-    // they are dropped — exactly what the q79 recursive-CTE oracle does
-    // (a null token list unnests to no rows)
-    // persist both scalar frames: `sim` is referenced twice and `words`
-    // four times downstream (banding, the two edge joins, the final
-    // join) — without the cache each reference re-runs the simhash
-    // kernel over the full corpus, which dominated q79/q82 at sf0.1
-    // (~4 s, of which ~2.5 s was repeated hashing). Both frames are
-    // (id, long) scalars, so the cache is tiny at any corpus size.
-    // Tracked (not raw persist): the returned plan references both, so
-    // only the CONSUMER can release them — CacheRegistry.releaseAll()
-    // after the action, or the session's next clearCache().
-    val sim = graft.core.CacheRegistry.track("simhashClusters.sim",
-      simhash(docs, idCol, textCol) // (id, simhash)
-        .filter(F.col("simhash").isNotNull))
-    val words = graft.core.CacheRegistry.track("simhashClusters.words",
-      sim.groupBy("simhash").agg(F.min("id").as("rep")))
+    val sim = byWord(docs, idCol, textCol)
+    val words = wordsOf(sim)
     val edges = wordEdgesFrom(words, maxHamming, maxBucket).select("id_a", "id_b")
     val wordClusters = connectedComponents(edges)
       .select(F.col("id").as("rep"), F.col("cluster"))
+    // both join inputs already sit on `sim`'s simhash partitioning: the
+    // doc→word join adds no exchange
     sim.join(words, "simhash")
       .join(wordClusters, Seq("rep"), "left")
       .select(F.col("id"),
         F.coalesce(F.col("cluster"), F.col("rep")).as("cluster"))
   }
+
+  /** (id, simhash) per document, hash-partitioned on `simhash` — the one
+    * input of the simhash word operators. Null text ⇒ null word;
+    * grouping those together would fuse every null-text document into
+    * one bogus "duplicate" cluster, so they are dropped — exactly what
+    * the q79 recursive-CTE oracle does (a null token list unnests to no
+    * rows).
+    *
+    * Not persisted: every consumer (the word collapse, its band
+    * explosion and q79's doc→word join) reads this one exchange, so
+    * exchange reuse runs the scan and the simhash kernel once per query.
+    * A persist would add a cache-fill stage and a cache-read job, and
+    * Spark plans each cached frame in a cloned session whose stages
+    * compile again on every warm pass (see `CacheRegistry`). */
+  private def byWord(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    simhash(docs, idCol, textCol)
+      .filter(F.col("simhash").isNotNull)
+      .repartition(F.col("simhash"))
+
+  /** Identical words collapsed to their min doc id: (simhash, rep). Over
+    * [[byWord]] the aggregate needs no exchange of its own. */
+  private def wordsOf(sim: DataFrame): DataFrame =
+    sim.groupBy("simhash").agg(F.min("id").as("rep"))
 
   /** Banded-candidate Hamming edges between DISTINCT simhash words —
     * shared by [[simhashClusters]] and [[simhashWordEdges]]. `words`
@@ -742,12 +760,7 @@ object Dedup {
     * representatives (min doc id of their identical-word group). */
   def simhashWordEdges(docs: DataFrame, idCol: String, textCol: String,
                        maxHamming: Int = 3, maxBucket: Int = 4096): DataFrame = {
-    val sim = simhash(docs, idCol, textCol).filter(F.col("simhash").isNotNull)
-    // tracked like simhashClusters' frames: `words` feeds banding and
-    // both edge joins — released by the consumer via CacheRegistry
-    val words = graft.core.CacheRegistry.track("simhashWordEdges.words",
-      sim.groupBy("simhash").agg(F.min("id").as("rep")))
-    wordEdgesFrom(words, maxHamming, maxBucket)
+    wordEdgesFrom(wordsOf(byWord(docs, idCol, textCol)), maxHamming, maxBucket)
   }
 
   /** Cross-document chunk-level exact dedup profile: for each document,

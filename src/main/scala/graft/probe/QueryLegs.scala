@@ -43,8 +43,10 @@ object QueryLegs {
     * while building the DataFrame: bounds estimates, memoized counts,
     * eager CC rounds) and force, listing the slowest jobs of each with
     * their call sites: many short jobs are per-job overhead to cut, one
-    * long shuffle is bytes to cut. Rep 1 carries cold memoized-bounds
-    * jobs and codegen. */
+    * long shuffle is bytes to cut. `compiles` counts the generated
+    * classes Spark compiled over build plus force (a warm rep that
+    * compiles again misses the codegen cache). Rep 1 carries cold
+    * memoized-bounds jobs and codegen. */
   def jobs(spark: SparkSession, a: Args): Unit = {
     val started = TrieMap.empty[Int, (Long, String)]
     val done = new ConcurrentLinkedQueue[(Int, Double, String)]
@@ -63,6 +65,7 @@ object QueryLegs {
       js.sortBy(-_._2).take(8).map { case (id, s, site) => f"j$id=$s%.2fs[$site]" }.mkString(" ")
     for ((name, fn) <- queries(a.names); rep <- 1 to a.reps.getOrElse(2)) {
       done.clear()
+      val c0 = compiles()
       val t0 = System.nanoTime()
       val df = fn(spark, a.sf)
       val build = secs(t0)
@@ -72,12 +75,16 @@ object QueryLegs {
       val force = secs(t1)
       val forceJobs = drained().drop(buildJobs.size)
       println(f"$name rep$rep build=$build%.2fs (${buildJobs.size} jobs) " +
-        f"force=$force%.2fs (${forceJobs.size} jobs) total=${build + force}%.2fs rows=$rows sum=$sum")
+        f"force=$force%.2fs (${forceJobs.size} jobs) total=${build + force}%.2fs " +
+        s"compiles=${compiles() - c0} rows=$rows sum=$sum")
       println(s"  build: ${fmt(buildJobs)}")
       println(s"  force: ${fmt(forceJobs)}")
       release(spark)
     }
   }
+
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def explain(spark: SparkSession, a: Args): Unit =
     queries(a.names).foreach { case (name, fn) =>

@@ -93,19 +93,61 @@ class PipelineSpec extends AnyFunSuite {
     // clean slate so cross-test caches can't mask or fake a leak
     CacheRegistry.releaseAll()
     spark.catalog.clearCache()
-    val sc = Dedup.simhashClusters(docs, "doc_id", "text")
+    // the simhash operators share one exchange and persist nothing
+    Dedup.simhashClusters(docs, "doc_id", "text").count()
+    assert(CacheRegistry.trackedTags.isEmpty, CacheRegistry.trackedTags)
     val cp = Dedup.containmentPairs(docs, "doc_id", "text", k = 2, tau = 0.1)
-    sc.count(); cp.count()
+    val keys = docs.select(F.col("doc_id"), Dedup.exactKey(F.col("text")).as("content_key"))
+    val bn = Dedup.bloomNewDocs(keys, keys.select("content_key"),
+      Dedup.bloomSketch(keys, "content_key", expectedItems = 100L), "content_key")
+    cp.count(); bn.count()
     // both operators registered their internal persists...
     val tags = CacheRegistry.trackedTags
-    assert(tags.exists(_.startsWith("simhashClusters")), tags)
     assert(tags.exists(_.startsWith("containmentPairs")), tags)
+    assert(tags.exists(_.startsWith("bloomNewDocs")), tags)
     // ...and one release empties the session cache completely: no
     // block-manager growth is left for the next query in the session
     CacheRegistry.releaseAll()
     assert(CacheRegistry.trackedTags.isEmpty)
     assert(spark.sharedState.cacheManager.isEmpty,
       "dataset cache must be empty after CacheRegistry.releaseAll()")
+  }
+
+  test("simhash word operators: a warm repeat over a parquet corpus compiles and persists nothing") {
+    import graft.core.CacheRegistry
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft-simhash").resolve("docs").toString
+    // doc 5 is one word (Hamming 1) away from doc 0: the edge set is not empty
+    val corpus = docs.unionByName(
+      Seq((5L, "the quick brown fox jumps over the lazy dog again and again quite"))
+        .toDF("doc_id", "text"))
+    corpus.unionByName(corpus.select((F.col("doc_id") + 10L).as("doc_id"), F.col("text")))
+      .write.parquet(dir)
+    def sorted(df: DataFrame) = df.collect().map(_.mkString("|")).toSeq.sorted
+    // one warm pass as a bench pass runs it: read, build, collect, release
+    def pass() = {
+      val corpus = graft.io.Sources.read(spark, "parquet", dir)
+      val out = (sorted(Dedup.simhashClusters(corpus, "doc_id", "text")),
+        sorted(Dedup.simhashWordEdges(corpus, "doc_id", "text")))
+      val tags = CacheRegistry.trackedTags
+      CacheRegistry.releaseAll()
+      (out, tags)
+    }
+    CacheRegistry.releaseAll(); spark.catalog.clearCache()
+    val (warm, _) = pass()
+    assert(warm._1.size == 12 && warm._2.contains("0|5|1"), warm)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (again, tags) = pass()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0,
+      "a warm repeat must find every generated class in the codegen cache")
+    assert(tags.isEmpty, tags)
+    assert(again == warm)
+    // the scan and the simhash kernel run once: the second reader of the
+    // simhash exchange reuses it
+    val clusters = Dedup.simhashClusters(graft.io.Sources.read(spark, "parquet", dir), "doc_id", "text")
+    clusters.collect()
+    assert(clusters.queryExecution.executedPlan.toString.contains("ReusedExchange"),
+      clusters.queryExecution.executedPlan)
   }
 
   test("CacheRegistry re-track guard: plan-equal same-tag tracks dedupe (r15 item 6)") {
@@ -642,6 +684,35 @@ class PipelineSpec extends AnyFunSuite {
     val out2 = Dedup.bloomNewDocs(batch, index, lossy, "content_key")
       .collect().map(_.getLong(0)).toSet
     assert(out2 == out)
+  }
+
+  test("bloomSketch is memoized per index file version; a failed build propagates") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val f = Files.createTempDirectory("graft-bloom").resolve("keys.csv")
+    def write(p: java.nio.file.Path, prefix: String) =
+      Files.writeString(p, ("content_key" +: (0 until 10).map(i => s"$prefix$i")).mkString("\n") + "\n")
+    def index() = graft.io.Sources.read(spark, "csv", f.toString, Map("header" -> "true"))
+    write(f, "k")
+    val ix = index()
+    val (first, cold) = TestSpark.built(Dedup.bloomSketch(ix, "content_key", expectedItems = 1000L))
+    val (second, warm) = TestSpark.built(Dedup.bloomSketch(index(), "content_key", expectedItems = 1000L))
+    assert(cold > 0 && warm == 0, s"cold build $cold jobs, repeat $warm")
+    assert(second.sameElements(first) && !(second eq first))
+    // each call gets its own copy: writing into one leaves the memo intact
+    second(second.length - 1) = (~second(second.length - 1)).toByte
+    assert(Dedup.bloomSketch(ix, "content_key", expectedItems = 1000L).sameElements(first))
+    // other sizing parameters are another sketch
+    assert(!Dedup.bloomSketch(ix, "content_key", expectedItems = 2L, fpp = 0.5).sameElements(first))
+    // a rename-replaced index file is another index
+    val tmp = f.resolveSibling("keys.tmp")
+    write(tmp, "n")
+    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING)
+    val replaced = index()
+    val (third, rebuilt) = TestSpark.built(Dedup.bloomSketch(replaced, "content_key", expectedItems = 1000L))
+    assert(rebuilt > 0 && !third.sameElements(first))
+    val bad = spark.range(1).toDF("k").filter("assert_true(k < 0) IS NULL")
+      .select(F.col("k").cast("string").as("content_key"))
+    intercept[Exception](Dedup.bloomSketch(bad, "content_key", expectedItems = 10L))
   }
 
   test("ImageIoDecodeKernel decodes real PNG/JPEG headers through the batch seam") {
