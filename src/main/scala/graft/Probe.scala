@@ -23,7 +23,8 @@ import graft.probe.{OrdLeg, PipeLeg, QueryLegs, ScaleLegs, StreamLeg}
   *    untimed warm pass, then `reps` (3) timings each beside the
   *    host-speed canary;
   *  - `jobs`: the construction/force split of each query with its Spark
-  *    jobs and codegen compiles, `reps` (2) times;
+  *    jobs and codegen compiles; each of `reps` (2) reps runs every
+  *    listed query and prints its compile total;
   *  - `explain`: formatted physical plans;
   *  - `cc`: connected components of a 500k-node graph from a
   *    1-partition and a default-partitioned input, which must agree;

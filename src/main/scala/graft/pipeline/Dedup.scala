@@ -146,21 +146,24 @@ object Dedup {
     val grouped =
       if (w == machine) exploded else exploded.repartition(w, F.col("bk"))
     val buckets = grouped.groupBy(F.col("bk"))
-      .agg(F.collect_list(F.col("id")).as("ids"))
+      .agg(F.sort_array(F.collect_list(F.col("id"))).as("ids"))
       .filter(F.size(F.col("ids")).between(2, maxBucket))
-    // pairs within a bucket; sort_array makes (a<b) canonical
-    buckets.select(F.explode(pairsOf(F.sort_array(F.col("ids")))).as("p"))
-      .select(F.col("p.a").as("id_a"), F.col("p.b").as("id_b"))
+    // a pair may share several bands; the band keys carry no signatures
+    // that would tell which band emits it, so duplicates go here
+    pairsWithin(buckets)
+      .select(F.col("a").as("id_a"), F.col("b").as("id_b"))
       .distinct()
   }
 
-  /** All (a,b) index pairs of a sorted array, as structs — pure exprs.
-    * (slice length must stay bounded by the array size: an Int.MaxValue
-    * length overflows slice's internal index math.) */
-  private def pairsOf(ids: Column): Column =
-    F.flatten(F.transform(ids, (x, i) =>
-      F.transform(F.slice(ids, i + 2, F.size(ids)), y =>
-        F.struct(x.as("a"), y.as("b")))))
+  /** Every (a, b) with `a` ahead of `b` in a bucket's sorted `ids`, one
+    * row each — canonical order comes from the sort. Two generators that
+    * stay in codegen: `posexplode`, then `explode` of the tail after `a`
+    * (its length is the array size: an Int.MaxValue length overflows
+    * slice's index math). The band key `bk` rides along. */
+  private def pairsWithin(buckets: DataFrame): DataFrame =
+    buckets.select(F.col("bk"), F.col("ids"), F.posexplode(F.col("ids")).as(Seq("i", "a")))
+      .select(F.col("bk"), F.col("a"),
+        F.explode(F.slice(F.col("ids"), F.col("i") + 2, F.size(F.col("ids")))).as("b"))
 
   /** Exact n-gram Jaccard similarity between two shingle arrays. JVM
     * kernel for the same reason as the others: the verify stage sits in
@@ -454,8 +457,10 @@ object Dedup {
       F.lit(sketch), F.xxhash64(F.col(keyCol)))
     val tagged = graft.core.CacheRegistry.track("bloomNewDocs.tagged",
       batch.withColumn("__might", might))
+    // duplicate or null index keys leave an anti-join's answer as it is,
+    // so the index side is not deduplicated first
     val positives = tagged.filter(F.col("__might"))
-      .join(index.select(F.col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+      .join(index.select(F.col(keyCol)), Seq(keyCol), "left_anti")
     tagged.filter(!F.col("__might")).unionByName(positives).drop("__might")
   }
 
@@ -554,19 +559,20 @@ object Dedup {
     * (id, cluster) row per node, cluster = the least id of its component;
     * a self-pair (a, a) keeps an isolated node visible.
     *
-    * One lazy plan, the same union-find run twice: each input partition
-    * reduces its pairs to a forest of (node, root) rows, at most one row
-    * per node it saw, and one task after `repartition(1)` merges the
-    * forests. Building it starts no Spark job and sets no conf. Union by
-    * minimum (the smaller root always wins) leaves every root at its
-    * component minimum, so no relabelling pass follows. Ids compare under
+    * One lazy plan: one task after `repartition(1)` runs a union-find
+    * over every pair. Building it starts no Spark job and sets no conf.
+    * Union by minimum (the smaller root always wins) leaves every root at
+    * its component minimum, so no relabelling pass follows. Ids compare under
     * Spark's ordering of their type — the order `min`/`least` use (UTF-8
     * byte order for strings, not `String.compareTo`) — and keep the
     * caller's type. Ids need value equality: binary ids are rejected.
     *
-    * Scale bound: the merge task holds one map entry per distinct node,
-    * and the per-partition pass caps its input at partitions × nodes
-    * rows (the largest graph on record, q58 at ×300, has 600k nodes). */
+    * Scale bound: the task holds one map entry per distinct node (the
+    * largest graph on record, q58 at ×300, has 600k nodes) and streams
+    * the pairs. A per-partition union-find ahead of the exchange would
+    * emit one row per node each partition saw, so it would shrink the
+    * task's input only where partitions see many more pairs than nodes,
+    * and it adds a serialize stage and an object pass to every query. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b"): DataFrame = {
     val canon = pairs.select(F.least(F.col(idA), F.col(idB)).as("id"),
@@ -574,9 +580,7 @@ object Dedup {
     val id = canon.schema.head
     require(id.dataType != BinaryType, "connectedComponents: binary ids have no value equality")
     val out = Encoders.row(StructType(Seq(id, id.copy(name = "cluster"))))
-    canon.mapPartitions(unionFind(id.dataType) _)(out)
-      .repartition(1)
-      .mapPartitions(unionFind(id.dataType) _)(out)
+    canon.repartition(1).mapPartitions(unionFind(id.dataType) _)(out)
   }
 
   /** Union-find over (a, b) rows, union by minimum under Spark's ordering
@@ -603,52 +607,23 @@ object Dedup {
     parent.keySet.asScala.iterator.map(k => Row(toScala(k), toScala(find(k))))
   }
 
-  /** 64-bit SimHash kernel: per token, ±1 into 64 bit-sums; sign bits
-    * form the word. Branch-heavy bit math — a compiled JVM kernel is two
-    * orders faster than 64 interpreted higher-order aggregates, so this
-    * is the one deliberate UDF in the pipeline layer. Tokenization stays
-    * a native expression; the kernel is one call per row, no shuffle at
-    * all (computed inside the scan stage). */
-  private val simhashKernel = F.udf { tokens0: Seq[String] =>
-    val tokens = if (tokens0 == null) Seq.empty[String] else tokens0
-    val sums = new Array[Int](64)
-    tokens.foreach { t =>
-      // md5-derived 64-bit token hash — shared with the native
-      // expression so both paths stay bit-identical AND the DuckDB
-      // oracle can replay the word (see SimHash64.tokenHash64)
-      val h = graft.exprs.SimHash64.tokenHash64(t)
-      var i = 0
-      while (i < 64) {
-        if (((h >>> i) & 1L) == 1L) sums(i) += 1 else sums(i) -= 1
-        i += 1
-      }
-    }
-    var word = 0L
-    var i = 0
-    while (i < 64) { if (sums(i) > 0) word |= (1L << i); i += 1 }
-    word
-  }
-
-  /** 64-bit SimHash per document — zero-shuffle scan-stage computation.
-    * Uses the native Catalyst expression (graft.exprs.SimHash64, codegen
-    * path) when a session is at hand; `simhashKernel` stays as the UDF
-    * form of the same algorithm. */
+  /** 64-bit SimHash per document — zero-shuffle scan-stage computation
+    * through the native Catalyst expression (graft.exprs.SimHash64: per
+    * token, ±1 into 64 bit-sums over an md5-derived token hash; the sign
+    * bits form the word). */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     graft.exprs.GraftFunctions.register(docs.sparkSession)
     docs.select(F.col(idCol).as("id"),
       F.call_function("simhash64", TextOps.tokens(F.col(textCol))).as("simhash"))
   }
 
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming(a: Column, b: Column): Column = F.bit_count(a.bitwiseXOR(b))
-
   /** SimHash near-dup candidates: band the 64-bit word into 4×16-bit
     * chunks; docs sharing any chunk are candidates (guarantees recall for
-    * Hamming ≤ 3), verified by exact Hamming distance. */
+    * Hamming ≤ 3), verified by exact Hamming distance. One long key per
+    * band, `(band << 16) | bucket`. */
   def simhashBands(sim: Column): Column =
     F.array((0 until 4).map { b =>
-      F.struct(F.lit(b).as("band"),
-        F.shiftright(sim, b * 16).bitwiseAND(0xFFFFL).as("bucket"))
+      F.lit(b.toLong << 16).bitwiseOR(F.shiftright(sim, b * 16).bitwiseAND(0xFFFFL))
     }: _*)
 
   /** SimHash duplicate-CLUSTER resolution — the scale-honest consumer
@@ -679,7 +654,7 @@ object Dedup {
         F.coalesce(F.col("cluster"), F.col("rep")).as("cluster"))
   }
 
-  /** (id, simhash) per document, hash-partitioned on `simhash` — the one
+  /** (simhash, id) per document, hash-partitioned on `simhash` — the one
     * input of the simhash word operators. Null text ⇒ null word;
     * grouping those together would fuse every null-text document into
     * one bogus "duplicate" cluster, so they are dropped — exactly what
@@ -693,7 +668,12 @@ object Dedup {
     * Spark plans each cached frame in a cloned session whose stages
     * compile again on every warm pass (see `CacheRegistry`). */
   private def byWord(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhash(docs, idCol, textCol)
+    simhash(docs, idCol, textCol).select("simhash", "id")
+      // The null filter stays on `simhash` although its pushed-down copy
+      // runs the kernel a second time per doc. A `text` filter ahead of
+      // the kernel looks cheaper, but the null constraints Spark infers
+      // then differ between the consumers, their exchanges stop matching
+      // and q79 loses the reuse (measured: 10 more generated classes).
       .filter(F.col("simhash").isNotNull)
       .repartition(F.col("simhash"))
 
@@ -705,20 +685,16 @@ object Dedup {
   /** Banded-candidate Hamming edges between DISTINCT simhash words —
     * shared by [[simhashClusters]] and [[simhashWordEdges]]. `words`
     * must be the (simhash, rep) word-collapse frame; emitted pairs are
-    * canonical (id_a < id_b, from the sorted bucket explosion). */
-  private def wordEdgesFrom(words: DataFrame, maxHamming: Int,
-                            maxBucket: Int): DataFrame = {
-    // CARRY the 8-byte word through the band explosion (r22; the r14
-    // nearestCellsCarry discipline): the bucket pair stream then
-    // already holds BOTH hashes, so the two rep→simhash joins the
-    // previous shape paid per edge computation (each a join stage in
-    // the eagerly-materialized CC input — q79/q82's build cost is
-    // dominated by these small sequential stages) disappear. The
-    // carried payload is one long per row; pair emission, canonical
-    // order (struct sort leads with the distinct rep) and the
-    // Hamming≤max filter are unchanged, so the edge set is identical.
-    // Same explosion-width discipline as candidatePairs (r8): the
-    // fanout estimate derives the repartition width.
+    * canonical (id_a < id_b, from the sorted bucket explosion) and
+    * distinct. */
+  private[graft] def wordEdgesFrom(words: DataFrame, maxHamming: Int,
+                                   maxBucket: Int): DataFrame = {
+    // The 8-byte word rides through the band explosion, so each pair
+    // already holds both hashes: no rep→simhash join per edge, and the
+    // lowest shared band is known without a distinct. Canonical order
+    // comes from the struct sort, which leads with the distinct rep.
+    // Same explosion-width discipline as candidatePairs: the fanout
+    // estimate derives the repartition width.
     val spark = words.sparkSession
     val machine = math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions)
@@ -726,21 +702,31 @@ object Dedup {
     val estFanout = if (nWords < 0) -1.0 else nWords.toDouble * 4
     val w = Explosion.width(estFanout, machine)
     if (w != machine) Explosion.logWidth("wordEdgesFrom", estFanout, w)
+    // The key column leads, as `simhash` does in [[byWord]]: the two hash
+    // exchanges then share one generated partitioning projection, and the
+    // partial and final band aggregates one grouping projection.
     val exploded = words.select(
-      F.struct(F.col("rep"), F.col("simhash")).as("id"),
-      F.explode(simhashBands(F.col("simhash"))).as("bk"))
+      F.explode(simhashBands(F.col("simhash"))).as("bk"),
+      F.struct(F.col("rep"), F.col("simhash")).as("id"))
     val grouped =
       if (w == machine) exploded else exploded.repartition(w, F.col("bk"))
     val buckets = grouped.groupBy(F.col("bk"))
-      .agg(F.collect_list(F.col("id")).as("ids"))
+      .agg(F.sort_array(F.collect_list(F.col("id"))).as("ids"))
       .filter(F.size(F.col("ids")).between(2, maxBucket))
-    buckets.select(F.explode(pairsOf(F.sort_array(F.col("ids")))).as("p"))
-      .select(F.col("p.a.rep").as("id_a"), F.col("p.b.rep").as("id_b"),
-        F.col("p.a.simhash").as("h_a"), F.col("p.b.simhash").as("h_b"))
-      .distinct()
-      .withColumn("hamming", hamming(F.col("h_a"), F.col("h_b")))
+    // Two distinct words share the buckets of 1-3 bands. The carried
+    // hashes show which: the pair is emitted only from the lowest shared
+    // band, so no distinct (and no exchange) follows. The cap acts on
+    // that bucket: a pair whose lowest shared bucket is over `maxBucket`
+    // is dropped.
+    val x = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+    val band = F.shiftright(F.col("bk"), 16)
+    val lowestShared = (0 until 3)
+      .map(b => band <= b || F.shiftright(x, b * 16).bitwiseAND(0xFFFFL) =!= 0).reduce(_ && _)
+    pairsWithin(buckets)
+      .filter(lowestShared)
+      .select(F.col("a.rep").as("id_a"), F.col("b.rep").as("id_b"),
+        F.bit_count(x).as("hamming"))
       .filter(F.col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
   }
 
   /** SimHash near-dup EDGES between word representatives — the bounded
@@ -759,9 +745,8 @@ object Dedup {
     * Output: (id_a, id_b, hamming), id_a < id_b, both word
     * representatives (min doc id of their identical-word group). */
   def simhashWordEdges(docs: DataFrame, idCol: String, textCol: String,
-                       maxHamming: Int = 3, maxBucket: Int = 4096): DataFrame = {
+                       maxHamming: Int = 3, maxBucket: Int = 4096): DataFrame =
     wordEdgesFrom(wordsOf(byWord(docs, idCol, textCol)), maxHamming, maxBucket)
-  }
 
   /** Cross-document chunk-level exact dedup profile: for each document,
     * the fraction of its `size`-token chunks whose content also appears

@@ -45,8 +45,11 @@ object QueryLegs {
     * their call sites: many short jobs are per-job overhead to cut, one
     * long shuffle is bytes to cut. `compiles` counts the generated
     * classes Spark compiled over build plus force (a warm rep that
-    * compiles again misses the codegen cache). Rep 1 carries cold
-    * memoized-bounds jobs and codegen. */
+    * compiles again misses the codegen cache). Reps are rep-major: each
+    * runs every listed query in turn, as a bench pass does, and ends
+    * with its compile total, so a warm rep's total shows eviction across
+    * the queries; one listed query gives its isolated reading. Rep 1
+    * carries cold memoized-bounds jobs and codegen. */
   def jobs(spark: SparkSession, a: Args): Unit = {
     val started = TrieMap.empty[Int, (Long, String)]
     val done = new ConcurrentLinkedQueue[(Int, Double, String)]
@@ -63,23 +66,28 @@ object QueryLegs {
     }
     def fmt(js: Vector[(Int, Double, String)]): String =
       js.sortBy(-_._2).take(8).map { case (id, s, site) => f"j$id=$s%.2fs[$site]" }.mkString(" ")
-    for ((name, fn) <- queries(a.names); rep <- 1 to a.reps.getOrElse(2)) {
-      done.clear()
-      val c0 = compiles()
-      val t0 = System.nanoTime()
-      val df = fn(spark, a.sf)
-      val build = secs(t0)
-      val buildJobs = drained()
-      val t1 = System.nanoTime()
-      val (rows, sum) = checksum(df)
-      val force = secs(t1)
-      val forceJobs = drained().drop(buildJobs.size)
-      println(f"$name rep$rep build=$build%.2fs (${buildJobs.size} jobs) " +
-        f"force=$force%.2fs (${forceJobs.size} jobs) total=${build + force}%.2fs " +
-        s"compiles=${compiles() - c0} rows=$rows sum=$sum")
-      println(s"  build: ${fmt(buildJobs)}")
-      println(s"  force: ${fmt(forceJobs)}")
-      release(spark)
+    val qs = queries(a.names)
+    for (rep <- 1 to a.reps.getOrElse(2)) {
+      val rep0 = compiles()
+      qs.foreach { case (name, fn) =>
+        done.clear()
+        val c0 = compiles()
+        val t0 = System.nanoTime()
+        val df = fn(spark, a.sf)
+        val build = secs(t0)
+        val buildJobs = drained()
+        val t1 = System.nanoTime()
+        val (rows, sum) = checksum(df)
+        val force = secs(t1)
+        val forceJobs = drained().drop(buildJobs.size)
+        println(f"$name rep$rep build=$build%.2fs (${buildJobs.size} jobs) " +
+          f"force=$force%.2fs (${forceJobs.size} jobs) total=${build + force}%.2fs " +
+          s"compiles=${compiles() - c0} rows=$rows sum=$sum")
+        println(s"  build: ${fmt(buildJobs)}")
+        println(s"  force: ${fmt(forceJobs)}")
+        release(spark)
+      }
+      println(s"rep$rep compiles=${compiles() - rep0} queries=${qs.size}")
     }
   }
 

@@ -26,8 +26,11 @@ class PipelineSpec extends AnyFunSuite {
       .select(F.col("doc_id"), Dedup.shingles(F.col("text")).as("sh"))
       .select(F.col("doc_id"), F.col("sh"),
         Dedup.bandKeysDirect(F.col("sh"), k = 32, bands = 8).as("bands"))
-    val cand = Dedup.candidatePairs(withBands, "doc_id", "bands")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rows = Dedup.candidatePairs(withBands, "doc_id", "bands")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val cand = rows.toSet
+    // 0 and 1 share all eight bands: the pair is still emitted once
+    assert(rows.length == cand.size, s"duplicate pairs in ${rows.toSeq}")
     assert(cand.contains((0L, 1L)), s"exact dup pair missing from $cand")
     assert(!cand.exists { case (a, b) => b == 3L || b == 4L || a == 3L || a == 4L },
       s"unrelated docs should not be candidates: $cand")
@@ -264,9 +267,12 @@ class PipelineSpec extends AnyFunSuite {
     // the re-shaped q42 contract: identical docs are one WORD, so a
     // clique contributes zero edges — the edge set must not grow when
     // the corpus is duplicated (the doc-pair form's e=1.41 blowup)
-    def edges(d: org.apache.spark.sql.DataFrame) =
-      Dedup.simhashWordEdges(d, "doc_id", "text").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    def edges(d: org.apache.spark.sql.DataFrame) = {
+      val rows = Dedup.simhashWordEdges(d, "doc_id", "text").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      assert(rows.length == rows.toSet.size, s"duplicate edges in ${rows.toSeq}")
+      rows.toSet
+    }
     val e1 = edges(docs)
     // brute-force expectation over word representatives: every rep pair
     // at Hamming ≤ 3 (banding is recall-1 there, so sets must be equal)
@@ -287,6 +293,54 @@ class PipelineSpec extends AnyFunSuite {
     val duped = docs.unionByName(
       docs.select((F.col("doc_id") + 100).as("doc_id"), F.col("text")))
     assert(edges(duped) == e1, "edge set must be duplication-invariant")
+  }
+
+  test("simhash word edges: each pair once, from its lowest shared band; the cap drops an over-full bucket") {
+    // crafted (simhash, rep) words; bands are the 16-bit chunks 0-3
+    def word(bits: Int*): Long = bits.foldLeft(0L)((w, b) => w | (1L << b))
+    val words = Seq(
+      10L -> word(),                 // A
+      20L -> word(48, 49),           // B: shares bands 0-2 with A, Hamming 2
+      30L -> word(0, 16),            // C: shares bands 2-3 with A, Hamming 2
+      40L -> word(0, 16, 32),        // D: shares band 3 with A at Hamming 3 (= max),
+                                     //    bands 0, 1, 3 with C at Hamming 1
+      50L -> word(48, 49, 50, 51))   // E: Hamming 4 from A (no edge), 2 from B
+    def edges(ws: Seq[(Long, Long)], maxBucket: Int) = {
+      val df = ws.map { case (r, w) => (w, r) }.toDF("simhash", "rep")
+      val rows = Dedup.wordEdgesFrom(df, maxHamming = 3, maxBucket = maxBucket).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      assert(rows.length == rows.toSet.size, s"duplicate edges in ${rows.toSeq}")
+      rows.toSet
+    }
+    val expected = (for {
+      (ra, wa) <- words; (rb, wb) <- words if ra < rb
+      h = java.lang.Long.bitCount(wa ^ wb) if h <= 3
+    } yield (ra, rb, h)).toSet
+    assert(expected == Set((10L, 20L, 2), (10L, 30L, 2), (10L, 40L, 3), (30L, 40L, 1), (20L, 50L, 2)))
+    assert(edges(words, 4096) == expected)
+    // four words share only their band-3 bucket, each of F2-F4 one bit
+    // per lower band away from F1 (Hamming 3); no other bucket is shared
+    val f1 = 0x7777L << 48 | 0xABCDL | 0xABCDL << 16 | 0xABCDL << 32
+    val fs = Seq(100L -> f1) ++ (0 until 3).map(b => (101L + b) -> (f1 ^ word(b, 16 + b, 32 + b)))
+    val f1Pairs = Set((100L, 101L, 3), (100L, 102L, 3), (100L, 103L, 3))
+    assert(edges(fs, 4) == f1Pairs)
+    assert(edges(fs, 3).isEmpty, "a bucket above maxBucket must emit no pair")
+  }
+
+  test("bloomNewDocs: duplicate and null index keys give a plain anti-join's answer") {
+    val index = Seq("k0", "k0", "k1", null, null, "k3", "k3").toDF("content_key")
+    val batch = Seq((1L, "k0"), (2L, "k1"), (3L, "k2"), (4L, null), (5L, "k2"), (6L, "k3"))
+      .toDF("doc_id", "content_key")
+    val want = batch.join(index, Seq("content_key"), "left_anti")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(want == Set(3L, 4L, 5L))
+    // exact sketch, then a lossy one that sends every key through the join
+    for (sketch <- Seq(Dedup.bloomSketch(index, "content_key", expectedItems = 100L),
+                       Dedup.bloomSketch(index, "content_key", expectedItems = 2L, fpp = 0.5))) {
+      val got = Dedup.bloomNewDocs(batch, index, sketch, "content_key").collect()
+      assert(got.map(_.getLong(0)).toSeq.sorted == want.toSeq.sorted, got.toSeq)
+    }
+    graft.core.CacheRegistry.releaseAll()
   }
 
   test("simhashClusters drops null-text docs instead of fusing them into one cluster") {
