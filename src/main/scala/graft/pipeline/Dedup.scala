@@ -559,20 +559,19 @@ object Dedup {
     * (id, cluster) row per node, cluster = the least id of its component;
     * a self-pair (a, a) keeps an isolated node visible.
     *
-    * One lazy plan: one task after `repartition(1)` runs a union-find
-    * over every pair. Building it starts no Spark job and sets no conf.
-    * Union by minimum (the smaller root always wins) leaves every root at
-    * its component minimum, so no relabelling pass follows. Ids compare under
+    * One lazy plan, the same union-find run twice: each input partition
+    * reduces its pairs to a forest of (node, root) rows, at most one row
+    * per node it saw, and one task after `repartition(1)` merges the
+    * forests. Building it starts no Spark job and sets no conf. Union by
+    * minimum (the smaller root always wins) leaves every root at its
+    * component minimum, so no relabelling pass follows. Ids compare under
     * Spark's ordering of their type — the order `min`/`least` use (UTF-8
     * byte order for strings, not `String.compareTo`) — and keep the
     * caller's type. Ids need value equality: binary ids are rejected.
     *
-    * Scale bound: the task holds one map entry per distinct node (the
-    * largest graph on record, q58 at ×300, has 600k nodes) and streams
-    * the pairs. A per-partition union-find ahead of the exchange would
-    * emit one row per node each partition saw, so it would shrink the
-    * task's input only where partitions see many more pairs than nodes,
-    * and it adds a serialize stage and an object pass to every query. */
+    * Scale bound: the merge task holds one map entry per distinct node,
+    * and the per-partition pass caps its input at partitions × nodes
+    * rows (the largest graph on record, q58 at ×300, has 600k nodes). */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b"): DataFrame = {
     val canon = pairs.select(F.least(F.col(idA), F.col(idB)).as("id"),
@@ -580,7 +579,9 @@ object Dedup {
     val id = canon.schema.head
     require(id.dataType != BinaryType, "connectedComponents: binary ids have no value equality")
     val out = Encoders.row(StructType(Seq(id, id.copy(name = "cluster"))))
-    canon.repartition(1).mapPartitions(unionFind(id.dataType) _)(out)
+    canon.mapPartitions(unionFind(id.dataType) _)(out)
+      .repartition(1)
+      .mapPartitions(unionFind(id.dataType) _)(out)
   }
 
   /** Union-find over (a, b) rows, union by minimum under Spark's ordering
@@ -638,7 +639,9 @@ object Dedup {
     * connected components resolve transitive clusters. Output: one
     * (id, cluster) row per document, cluster = min doc id of its
     * transitive near-dup set — the keeper-selection contract shared
-    * with `connectedComponents`. */
+    * with `connectedComponents`. The edges and their bucket cap are
+    * those of [[simhashWordEdges]]: a pair whose lowest shared bucket is
+    * over `maxBucket` links nothing. */
   def simhashClusters(docs: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3, maxBucket: Int = 4096): DataFrame = {
     val sim = byWord(docs, idCol, textCol)
@@ -743,7 +746,13 @@ object Dedup {
     * canonical consumer); this surface exists for edge-level audits —
     * which near-dup relations exist and at what Hamming distance.
     * Output: (id_a, id_b, hamming), id_a < id_b, both word
-    * representatives (min doc id of their identical-word group). */
+    * representatives (min doc id of their identical-word group).
+    *
+    * Bucket cap: a word pair is judged in its LOWEST shared band only.
+    * If that band's bucket holds more than `maxBucket` words, the pair
+    * is dropped, even when a higher band it shares has a bucket within
+    * the cap. Below the cap the edge set is every Hamming ≤ `maxHamming`
+    * pair that shares a band (all of them for `maxHamming` ≤ 3). */
   def simhashWordEdges(docs: DataFrame, idCol: String, textCol: String,
                        maxHamming: Int = 3, maxBucket: Int = 4096): DataFrame =
     wordEdgesFrom(wordsOf(byWord(docs, idCol, textCol)), maxHamming, maxBucket)

@@ -18,11 +18,14 @@ object PipelineQueries extends QueryPack {
     * giving the operators deterministic, non-empty ground truth. */
   private def dupedDocs(s: org.apache.spark.sql.SparkSession, dir: String) =
     // One scan yields both copies. No repartition: the simhash queries'
-    // pushed-down null filter runs their kernel in the scan stage anyway,
-    // and the exchange would cost a generated stage per query. Queries
-    // with a heavy per-doc kernel after the scan spread the docs first
-    // (the corpus parquet is one split locally; real corpora arrive
-    // pre-split).
+    // null filter is pushed below their projection, so the scan stage
+    // runs the kernel anyway, and the exchange would cost a generated
+    // stage per query. So both kernel evaluations per doc (the filter's
+    // and the projection's) share the scan task, one task on the
+    // one-split local corpus; once that pushdown is stopped, spreading
+    // the docs ahead of the kernel pays again. Queries with a heavy
+    // per-doc kernel after the scan spread the docs first (real corpora
+    // arrive pre-split).
     Tables.documents(s, dir)
       .select(F.explode(F.array(F.lit(0), F.lit(1000000))).as("shift"),
         F.col("doc_id"), F.col("text"))
@@ -262,7 +265,10 @@ object PipelineQueries extends QueryPack {
         // with a cap of 32 dropped 466 true pairs — caught by this
         // oracle). Word collapse shrinks buckets (identical docs are
         // one word), so 4096 keeps recall 1 with wide margin while
-        // still guarding against a degenerate all-words bucket.
+        // still guarding against a degenerate all-words bucket. The cap
+        // is judged in a pair's lowest shared band only: a pair whose
+        // lowest shared bucket is over it is lost, even when a higher
+        // shared bucket is within it.
         Dedup.simhashWordEdges(dupedDocs(s, dir), "doc_id", "text",
             maxHamming = 3, maxBucket = 4096)
           .orderBy("id_a", "id_b")

@@ -325,6 +325,14 @@ class PipelineSpec extends AnyFunSuite {
     val f1Pairs = Set((100L, 101L, 3), (100L, 102L, 3), (100L, 103L, 3))
     assert(edges(fs, 4) == f1Pairs)
     assert(edges(fs, 3).isEmpty, "a bucket above maxBucket must emit no pair")
+    // G1 and G2 (Hamming 2) share bands 0 and 2; G3 shares only band 0.
+    // The pair is judged in its lowest shared band: with that bucket
+    // over the cap it is dropped, although its band-2 bucket is within it
+    def g(b1: Long, b2: Long, b3: Long): Long = 0xAAAAL | b1 << 16 | b2 << 32 | b3 << 48
+    val gs = Seq(200L -> g(0x0001L, 0x1234L, 0x0001L), 201L -> g(0x0003L, 0x1234L, 0x0003L),
+      202L -> g(0xF000L, 0x4321L, 0xF000L))
+    assert(edges(gs, 3) == Set((200L, 201L, 2)))
+    assert(edges(gs, 2).isEmpty, "an over-full lowest shared bucket drops the pair")
   }
 
   test("bloomNewDocs: duplicate and null index keys give a plain anti-join's answer") {
