@@ -227,7 +227,7 @@ object Similarity {
                                     cos: (Column, Column) => Column): DataFrame = {
     var centroids = c.orderBy("cid0").limit(nlist)
       .select(F.row_number().over(Window.orderBy("cid0")).as("cell"), F.col("cv").as("centroid"))
-    for (round <- 0 until iters) {
+    for (_ <- 0 until iters) {
       // FUSED re-average (r22, r21 verdict item 3): ONE groupBy(cell)
       // collecting the cell's vectors, then every dim's mean computed
       // in the same projection — where the r13–r21 shape posexploded to
@@ -235,15 +235,8 @@ object Similarity {
       // the re-assemble groupBy(cell)). Halves the training stage
       // count; the collected state per group is ~trainCap/nlist ≈ 8
       // vectors — bounded by the training cap at any corpus size.
-      // a tracked persist, NOT localCheckpoint: checkpoint — even lazy —
-      // runs every AQE shuffle stage at CALL time, so query construction
-      // (explain, the cartesian plan guard, registry sweeps) paid
-      // Lloyd-round jobs per build. persist is plan-time free and
-      // still compute-once at first action (each round's frame is
-      // nlist rows, so the cache is trivial); `iters` is small and
-      // fixed, so the un-truncated lineage stays bounded. Tracking
-      // lets `CacheRegistry.releaseAll` free the rounds, and a rebuild
-      // over the same corpus gets the round already cached.
+      // Nothing is persisted: `iters` is small and fixed, so the lineage
+      // stays bounded, and each consumer replays the same rounds.
       // The re-average is DETERMINISTIC under recomputation (ADVICE r12)
       // and BIT-IDENTICAL to the two-step form (the sorted-sum
       // re-average contract): per (cell, dim) the same multiset of
@@ -253,18 +246,17 @@ object Similarity {
       // real corpus; the q55/q56/q58 oracles hash-pin the rest.
       // Precondition (the corpus contract): fixed-width vectors with no
       // null elements — the same shape every cosine below assumes.
-      centroids = graft.core.CacheRegistry.track(s"trainCentroids.round$round",
-        nearestCellsCarry(c, centroids, "cid0", "cv", 1, cos)
-          .groupBy("cell")
-          .agg(F.collect_list(F.col("cv")).as("__vs"))
-          .select(F.col("cell"),
-            F.transform(
-              F.sequence(F.lit(0), F.size(F.element_at(F.col("__vs"), 1)) - 1),
-              d => (F.aggregate(
-                      F.array_sort(F.transform(F.col("__vs"),
-                        v => F.element_at(v, d + 1).cast("double"))),
-                      F.lit(0.0), (acc, y) => acc + y)
-                    / F.size(F.col("__vs"))).cast("float")).as("centroid")))
+      centroids = nearestCellsCarry(c, centroids, "cid0", "cv", 1, cos)
+        .groupBy("cell")
+        .agg(F.collect_list(F.col("cv")).as("__vs"))
+        .select(F.col("cell"),
+          F.transform(
+            F.sequence(F.lit(0), F.size(F.element_at(F.col("__vs"), 1)) - 1),
+            d => (F.aggregate(
+                    F.array_sort(F.transform(F.col("__vs"),
+                      v => F.element_at(v, d + 1).cast("double"))),
+                    F.lit(0.0), (acc, y) => acc + y)
+                  / F.size(F.col("__vs"))).cast("float")).as("centroid"))
     }
     centroids
   }
@@ -397,8 +389,9 @@ object Similarity {
     * probe filled a 75 GB scratch disk at τ = 0.4 / 2M vectors) — this
     * method prices the join with two cheap aggregations (no candidate
     * row is ever materialized) so a caller can provision, or raise τ
-    * or nlist, BEFORE running it. Separate stats and pairs calls over
-    * one corpus share ONE tracked assignment cache. */
+    * or nlist, BEFORE running it. Nothing is persisted: a stats call
+    * then a pairs call over one corpus each train the centroids (at
+    * most max(4000, 8·nlist) rows read) and assign the corpus. */
   def cosinePairsCompleteStats(corpus: DataFrame, threshold: Double,
                                nlist: Int = -1, iters: Int = 2,
                                idCol: String = "vec_id", vecCol: String = "embedding",
@@ -463,16 +456,13 @@ object Similarity {
     // through Window.partitionBy(cid0), hash-shuffling Θ(n^1.5) bytes;
     // at the ×1000 probe (2M vectors, 11.3k auto cells) that was ~0.9 TB
     // of shuffle and filled this box's disk. Same picks bit-for-bit
-    // (sim desc, tie → smaller cell; cosine never NaN). Two consumers
-    // (the α scalar and the candidate set), so the n-ROW frame is cached
-    // under the existing byte budget (64 B/row estimate) — linear in n,
-    // never n^1.5 state. Unknown size (explicit nlist, no rowCount)
-    // keeps the cache: the bounded spec/ad-hoc path.
-    val assignedRaw = assignCellsWithSim(c, centroids, "cid0", "cv", cos)
-    val assigned =
-      if (cachesAssigned(corpus.sparkSession, total))
-        graft.core.CacheRegistry.track("cosinePairsComplete.assigned", assignedRaw)
-      else assignedRaw
+    // (sim desc, tie → smaller cell; cosine never NaN). Not persisted:
+    // each consumer (the α scalar, the candidate join, the stats'
+    // per-cell count) re-runs this map-only pass over one reused
+    // broadcast of the centroid array. A shared `repartition("cell")`
+    // is not reused: column pruning narrows each consumer's copy of the
+    // exchange to different columns.
+    val assigned = assignCellsWithSim(c, centroids, "cid0", "cv", cos)
     // α as a broadcast scalar: cosα = min assignment sim (clamped to
     // [-1,1]); probe cutoff = cos(acos(τ)+α) = τ·cosα − sinτ̄·sinα
     val alphaRow = assigned.agg(
@@ -489,22 +479,6 @@ object Similarity {
       .otherwise(F.lit(threshold) * F.col("__cosA") - F.lit(sinT) * sinA)
     CompleteParts(c, allSims, assigned, alphaRow, cutoff, total)
   }
-
-  /** Byte budget for [[cosinePairsComplete]]'s tracked (id, cell, sim)
-    * assignment cache: default 8 GiB — comfortably held by one big
-    * executor's storage fraction and far under this box's 128 GiB, yet
-    * crossed by the 100× probe's 200k×3.6k frame (~46 GB at the 64-byte
-    * row estimate), so the skip branch is the one that runs at target
-    * scale. Override per session via `graft.simsCacheMaxBytes`
-    * (specs/probes use a tiny value to force the uncached branch). */
-  def simsCacheMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    Knobs.long(spark, "graft.simsCacheMaxBytes", 8L * 1024 * 1024 * 1024)
-
-  /** Whether [[cosinePairsComplete]] caches its assignment frame of
-    * `total` rows: an unknown size (`total < 0`) or `total` × 64 B within
-    * [[simsCacheMaxBytes]]. */
-  private[graft] def cachesAssigned(spark: org.apache.spark.sql.SparkSession, total: Long): Boolean =
-    total < 0 || total * 64L <= simsCacheMaxBytes(spark)
 
   /** Row bound for [[knnClassifyIvf]]'s broadcast-hinted label attach:
     * the queries×k survivor frame is hinted while it has at most this

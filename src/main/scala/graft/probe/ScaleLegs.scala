@@ -188,9 +188,8 @@ object ScaleLegs {
   /** q55/q58's complete cosine-pairs path (τ = 0.4, the registered
     * completeness regime) and the IVF classification at ×100 / ×1000 of
     * the embeddings. Each timing names the budget branch that runs, as
-    * the library's own gates decide it: the assigned-frame cache
-    * (`Similarity.cachesAssigned`), broadcast vs shuffled verify and
-    * probes (`Similarity.broadcastableVecs`) and the hinted label attach
+    * the library's own gates decide it: broadcast vs shuffled verify
+    * and probes (`Similarity.broadcastableVecs`) and the hinted label attach
     * (`Similarity.maxBroadcastSurvivors`). `x55stats`
     * prices the candidate fan-out without materializing a pair. */
   def vecs(spark: SparkSession, a: Args): Unit = {
@@ -198,8 +197,7 @@ object ScaleLegs {
     val dim = base.select(F.size(F.col("embedding"))).head().getInt(0)
     val tau = 0.4
     def gates(corpus: DataFrame, n: Long): String =
-      s"nlist=${nlist(n)} assigned(" +
-        (if (Similarity.cachesAssigned(spark, n)) "cache" else "SKIP cache") + ") verify(" +
+      s"nlist=${nlist(n)} verify(" +
         (if (Similarity.broadcastableVecs(corpus, "embedding", n)) "broadcast" else "SHUFFLED") +
         ") probes(" +
         (if (Similarity.broadcastableVecs(corpus, "embedding", 4 * n)) "broadcast" else "SHUFFLED") +
@@ -214,7 +212,6 @@ object ScaleLegs {
         val st = Similarity.cosinePairsCompleteStats(d, tau).head()
         println(s"x55_fanout_${factor}x n=${st.getLong(0)} probe_rows=${st.getLong(1)} " +
           s"candidate_pairs=${st.getLong(2)} cos_alpha=${st.getDouble(3)}")
-        spark.catalog.clearCache()
       }
       if (a.wants("q55")) timed(spark, s"q55_complete_${factor}x", gates(d, n))(
         Similarity.cosinePairsComplete(d, tau).select("id_a", "id_b"))

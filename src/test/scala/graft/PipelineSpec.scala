@@ -581,7 +581,7 @@ class PipelineSpec extends AnyFunSuite {
     val fused = bits(Similarity.trainCentroids(c, 5, 2, cos))
     val two = bits(trainCentroidsTwoStep(c, 5, 2, cos))
     assert(fused == two, "fused re-average drifted from the two-step anchor")
-    spark.catalog.clearCache() // the trainers persist per-round frames
+    spark.catalog.clearCache() // the two-step reference persists its rounds
   }
 
   /** The two-shuffle Lloyd re-average (posexplode → groupBy(cell, dim) →
@@ -902,6 +902,14 @@ class PipelineSpec extends AnyFunSuite {
     val e2 = pairs(Similarity.cosinePairs(clustered, 0.9))
     val c2 = pairs(Similarity.cosinePairsComplete(clustered, 0.9, nlist = 8))
     assert(e2.nonEmpty && c2 == e2)
+    // and with a known row count, which takes the broadcast verify branch
+    val rnd11 = new scala.util.Random(11)
+    val sized = (0 until 80).map { i =>
+      (i.toLong, Array.fill(6)(rnd11.nextFloat() * 2f - 1f))
+    }.toDF("vec_id", "embedding")
+    val e3 = pairs(Similarity.cosinePairs(sized, 0.6))
+    val c3 = pairs(Similarity.cosinePairsComplete(sized, 0.6, nlist = 8, rowCount = 80L))
+    assert(e3.nonEmpty && c3 == e3, s"missing ${e3 -- c3}, extra ${c3 -- e3}")
   }
 
   test("cosinePairsComplete: antipodal outlier past the pi radius stays complete (ADVICE r11)") {
@@ -951,45 +959,7 @@ class PipelineSpec extends AnyFunSuite {
     graft.core.CacheRegistry.releaseAll()
   }
 
-  test("cosinePairsComplete assigned cache is budget-gated (r11 verdict 2, retargeted r13)") {
-    import spark.implicits._
-    graft.core.CacheRegistry.releaseAll()
-    spark.catalog.clearCache()
-    val rnd = new scala.util.Random(11)
-    val df = (0 until 80).map { i =>
-      (i.toLong, Array.fill(6)(rnd.nextFloat() * 2f - 1f))
-    }.toDF("vec_id", "embedding")
-    def run() = Similarity.cosinePairsComplete(df, 0.6, nlist = 8, rowCount = 80L)
-    def pairs(d: org.apache.spark.sql.DataFrame) =
-      d.select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val prev = spark.conf.getOption("graft.simsCacheMaxBytes")
-    try {
-      // over budget: the assignment frame must stay lazy (no tracked tag)
-      spark.conf.set("graft.simsCacheMaxBytes", "1")
-      val gated = run()
-      assert(!graft.core.CacheRegistry.trackedTags.contains("cosinePairsComplete.assigned"),
-        "over-budget build must not track the assigned cache")
-      val gatedPairs = pairs(gated)
-      // under budget: same build tracks the cache; identical pair set
-      spark.conf.set("graft.simsCacheMaxBytes", (1L << 33).toString)
-      val cached = run()
-      assert(graft.core.CacheRegistry.trackedTags.contains("cosinePairsComplete.assigned"),
-        "under-budget build must track the assigned cache")
-      assert(pairs(cached) == gatedPairs,
-        "the gate decides a cache, never the pair set")
-      assert(gatedPairs == pairs(Similarity.cosinePairs(df, 0.6)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("graft.simsCacheMaxBytes", v)
-        case None => spark.conf.unset("graft.simsCacheMaxBytes")
-      }
-      graft.core.CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("cosinePairsCompleteWithStats shares ONE tracked assignment cache (r14)") {
+  test("cosinePairsCompleteStats then cosinePairsComplete persist nothing") {
     import spark.implicits._
     import graft.core.CacheRegistry
     CacheRegistry.releaseAll(); spark.catalog.clearCache()
@@ -997,16 +967,55 @@ class PipelineSpec extends AnyFunSuite {
     val df = (0 until 60).map { i =>
       (i.toLong, Array.fill(6)(rnd.nextFloat() * 2f - 1f))
     }.toDF("vec_id", "embedding")
-    try {
-      // r16 re-track guard: the standalone stats-then-run calls used to
-      // persist one copy EACH under the shared tag (doubled executor
-      // cache + double-counted bench bytes); plan-equal re-tracks now
-      // return the existing frame, so the tag holds ONE entry
-      Similarity.cosinePairsCompleteStats(df, 0.5, nlist = 8, rowCount = 60L).head()
-      Similarity.cosinePairsComplete(df, 0.5, nlist = 8, rowCount = 60L).collect()
-      assert(CacheRegistry.trackedTags.count(_ == "cosinePairsComplete.assigned") == 1,
-        CacheRegistry.trackedTags.toString)
-    } finally { CacheRegistry.releaseAll(); spark.catalog.clearCache() }
+    Similarity.cosinePairsCompleteStats(df, 0.5, nlist = 8, rowCount = 60L).head()
+    Similarity.cosinePairsComplete(df, 0.5, nlist = 8, rowCount = 60L).collect()
+    assert(CacheRegistry.trackedTags.isEmpty, CacheRegistry.trackedTags)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("IVF operators: a warm repeat over a parquet embeddings corpus compiles and persists nothing") {
+    import graft.core.CacheRegistry
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").resolve("emb").toString
+    val rnd = new scala.util.Random(17)
+    (0 until 120).map { i =>
+      (i.toLong, Array.fill(6)(rnd.nextFloat() * 2f - 1f))
+    }.toDF("vec_id", "embedding").write.parquet(dir)
+    def read() = graft.io.Sources.read(spark, "parquet", dir)
+    def sorted(df: DataFrame) = df.collect().map(_.mkString("|")).toSeq.sorted
+    // Spark's codegen cache holds 100 classes in four 25-entry LRU
+    // segments, so each operator gets its own pass, small enough that a
+    // repeat finds every class: cosinePairsComplete without Lloyd rounds
+    // (about 50 classes; with two rounds about 75, which overflows a
+    // segment in some JVMs) and ivfTopK with its two rounds (about 30)
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "cosinePairsComplete" -> (c => Similarity.cosinePairsComplete(c, 0.6, nlist = 8, iters = 0)),
+      "ivfTopK" -> (c => Similarity.ivfTopK(c, c.filter(F.col("vec_id") < 5L), 3,
+        nlist = 4, nprobe = 2)))
+    CacheRegistry.releaseAll(); spark.catalog.clearCache()
+    for ((name, op) <- ops) {
+      // one warm pass as a bench pass runs it: read, build, collect, release
+      def pass() = {
+        val out = sorted(op(read()))
+        val tags = CacheRegistry.trackedTags
+        CacheRegistry.releaseAll()
+        (out, tags)
+      }
+      val (warm, _) = pass()
+      assert(warm.nonEmpty, name)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (again, tags) = pass()
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0,
+        s"$name: a warm repeat must find every generated class in the codegen cache")
+      assert(tags.isEmpty, s"$name: $tags")
+      assert(again == warm, name)
+    }
+    // the α scalar and the candidate join share one broadcast of the
+    // centroid array
+    val pairs = Similarity.cosinePairsComplete(read(), 0.6, nlist = 8, iters = 0)
+    pairs.collect()
+    assert(pairs.queryExecution.executedPlan.toString.contains("ReusedExchange"),
+      pairs.queryExecution.executedPlan)
   }
 
   test("ivfTopK: cell assignment carries vectors — no id-keyed self-join (r14)") {
@@ -1101,9 +1110,10 @@ class PipelineSpec extends AnyFunSuite {
         assert(exact.nonEmpty, s"tau $tau")
         assert(pairs(Similarity.cosinePairsComplete(df, tau, nlist = 6)) == exact, s"tau $tau")
       }
-      // the retired dispatch knob no longer moves the plan
+      // the retired dispatch knob no longer moves the plan (expression
+      // ids and lambda variable names are fresh per build)
       def analyzed() = Similarity.cosinePairsComplete(df, 0.9, nlist = 6)
-        .queryExecution.analyzed.toString.replaceAll("#\\d+L?", "")
+        .queryExecution.analyzed.toString.replaceAll("#\\d+L?|(?<=\\b[xyz])_\\d+", "")
       val before = analyzed()
       spark.conf.set("graft.cosinePairs.autoTau", "1.01")
       assert(analyzed() == before)

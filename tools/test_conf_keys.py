@@ -19,10 +19,6 @@ from test_sources import GRAFT, scala_files
 
 # key -> (why it exists, what sets it)
 KEYS = {
-    "graft.simsCacheMaxBytes": (
-        "byte budget for cosinePairsComplete's tracked assignment cache; the 100x "
-        "probe's frame crosses the 8 GiB default, so the uncached branch runs at scale",
-        "PipelineSpec \"cosinePairsComplete assigned cache is budget-gated\""),
     "graft.knn.maxBroadcastSurvivors": (
         "row bound on knnClassifyIvf's broadcast label attach; crawl-sized query sets "
         "must shuffle instead of OOMing the driver",
